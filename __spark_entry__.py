@@ -968,11 +968,7 @@ def _q_dedup_minhash_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # eager_signatures: this callable executes immediately (bench/driver),
-    # so the call-time localCheckpoint barrier is pure win (item 63)
-    return D.simhash_near_dup_pairs(
-        _corpus_with_dups(spark, sf_dir), max_hamming=3, eager_signatures=True
-    )
+    return D.simhash_near_dup_pairs(_corpus_with_dups(spark, sf_dir), max_hamming=3)
 
 
 #: containment arm: larger-direction threshold (non-empty at sf0.01,
@@ -2423,11 +2419,7 @@ def _q_curate_sample_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unbudgeted -> dropped).  Column reuse: quality carries the weight.
     wcorpus = _corpus_with_dups(spark, sf_dir)
     wsample = CU.weighted_budget_sample(
-        # eager_fingerprints: this callable executes immediately
-        # (bench/driver), so the call-time fingerprint barrier is pure
-        # win (the eager_signatures treatment — lazy default, fast flag
-        # at run-now sites)
-        D.exact_dup_weights(wcorpus, eager_fingerprints=True).join(
+        D.exact_dup_weights(wcorpus).join(
             wcorpus.select("doc_id", "lang"), "doc_id"
         ),
         WSAMPLE_BUDGETS,

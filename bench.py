@@ -238,7 +238,7 @@ def main() -> None:
 
     _tiny = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet")).limit(200)
     _D.minhash_lsh_dedup_pairs(_tiny, threshold=0.5).count()
-    _D.simhash_near_dup_pairs(_tiny, max_hamming=3, eager_signatures=True).count()
+    _D.simhash_near_dup_pairs(_tiny, max_hamming=3).count()
     spark.catalog.clearCache()
 
     def canary() -> float:
@@ -370,7 +370,7 @@ def main() -> None:
         operator's cost story, unlike the excluded index builds).  The
         same dedup.exact_dup_weights call the entry arm verifies (its
         internal fingerprint barrier is the measured 7.4 -> ~2 s fix)."""
-        return D.exact_dup_weights(docs, eager_fingerprints=True).join(
+        return D.exact_dup_weights(docs).join(
             docs.select("doc_id", "lang"), "doc_id"
         )
 

@@ -99,7 +99,7 @@ def main() -> None:
         ),
         "events_hll_rollup": lambda: EV.approx_distinct_rollup(events),
         "curate_weighted_sample": lambda: CU.weighted_budget_sample(
-            D.exact_dup_weights(docs, eager_fingerprints=True).join(
+            D.exact_dup_weights(docs).join(
                 docs.select("doc_id", "lang"), "doc_id"
             ),
             entry.WSAMPLE_BUDGETS,

@@ -109,7 +109,7 @@ def main() -> None:
         "ann_pq_batch_50": lambda: _pq_batch(),
         "ann_ivfpq_batch_50": lambda: _ivfpq_batch(),
         "curate_weighted_sample": lambda: CU.weighted_budget_sample(
-            D.exact_dup_weights(docs, eager_fingerprints=True).join(
+            D.exact_dup_weights(docs).join(
                 docs.select("doc_id", "lang"), "doc_id"
             ),
             entry.WSAMPLE_BUDGETS,

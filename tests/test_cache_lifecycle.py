@@ -12,6 +12,7 @@ identical with the barrier on and off.
 
 from __future__ import annotations
 
+import itertools
 import os
 
 import pytest
@@ -143,43 +144,127 @@ def test_checkpoint_blocks_drain_after_frame_gc(spark, docs):
     )
 
 
+def _with_copies(docs):
+    """(doc_id, text) plus exact copies of doc_id < 50 re-keyed +10000 —
+    duplicates for the exact-dup weights and SimHash pairs to find."""
+    corpus = docs.select("doc_id", "text")
+    return corpus.unionByName(
+        corpus.where("doc_id < 50").withColumn("doc_id", F.col("doc_id") + 10000)
+    )
+
+
+def _barriered_ops(corpus):
+    """Every dedup operator whose shared frame goes through
+    ``barrier.call_barrier`` unconditionally or by default."""
+    from wpvectordb_spark.operators import dedup as D
+
+    return {
+        "minhash_lsh_dedup_pairs": lambda: D.minhash_lsh_dedup_pairs(
+            corpus, threshold=0.5
+        ),
+        "simhash_near_dup_pairs": lambda: D.simhash_near_dup_pairs(
+            corpus, max_hamming=3
+        ),
+        "exact_dup_weights": lambda: D.exact_dup_weights(corpus),
+    }
+
+
 def test_barrier_mode_escape_hatch(spark, docs, tmp_path):
     """Round-12 (verdict item 6): the lazy-localCheckpoint barriers are
     not scale-safe under executor loss, so the barrier helper exposes a
     session-level mode knob.  ``reliable`` (with a checkpoint dir)
     and ``none`` must both produce identical rows to the default;
     ``reliable`` WITHOUT a checkpoint dir must refuse loudly rather
-    than silently downgrade; unknown modes are refused."""
+    than silently downgrade; unknown modes are refused.  Checked for
+    each barriered dedup operator."""
     from tests.conftest import rows_key
-    from wpvectordb_spark.operators import dedup as D
 
-    corpus = docs.select("doc_id", "text")
-    base = D.minhash_lsh_dedup_pairs(corpus, threshold=0.5)
-    want = rows_key(base.columns, base.collect())
+    ops = _barriered_ops(_with_copies(docs))
+
+    def rows(build):
+        df = build()
+        return rows_key(df.columns, df.collect())
+
+    want = {name: rows(build) for name, build in ops.items()}
+    assert all(want[name][1] for name in ops)  # every operator finds rows
 
     sc = spark.sparkContext
     had_dir = not sc._jsc.sc().getCheckpointDir().isEmpty()
     try:
+        spark.conf.set("spark.wpvectordb.barrier", "reliable")
         if not had_dir:
             # refusal must precede the directory existing
-            spark.conf.set("spark.wpvectordb.barrier", "reliable")
-            with pytest.raises(ValueError, match="checkpoint"):
-                D.minhash_lsh_dedup_pairs(corpus, threshold=0.5).collect()
+            for name, build in ops.items():
+                with pytest.raises(ValueError, match="checkpoint"):
+                    build().collect()
             sc.setCheckpointDir(str(tmp_path / "ckpt"))
-        else:  # another test already pinned a session checkpoint dir
-            spark.conf.set("spark.wpvectordb.barrier", "reliable")
-        got = D.minhash_lsh_dedup_pairs(corpus, threshold=0.5)
-        assert rows_key(got.columns, got.collect()) == want
-
-        spark.conf.set("spark.wpvectordb.barrier", "none")
-        got = D.minhash_lsh_dedup_pairs(corpus, threshold=0.5)
-        assert rows_key(got.columns, got.collect()) == want
+        # else: another test already pinned a session checkpoint dir
+        for mode in ("reliable", "none"):
+            spark.conf.set("spark.wpvectordb.barrier", mode)
+            for name, build in ops.items():
+                assert rows(build) == want[name], (mode, name)
 
         spark.conf.set("spark.wpvectordb.barrier", "bogus")
-        with pytest.raises(ValueError, match="bogus"):
-            D.minhash_lsh_dedup_pairs(corpus, threshold=0.5).collect()
+        for name, build in ops.items():
+            with pytest.raises(ValueError, match="bogus"):
+                build().collect()
     finally:
         spark.conf.unset("spark.wpvectordb.barrier")
+
+
+_PROBE_SEQ = itertools.count()
+
+
+def _jobs_started(sc, fn):
+    """(fn(), number of Spark jobs fn started) — counted through a job
+    group unique to this call."""
+    group = f"build-probe-{next(_PROBE_SEQ)}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc._jsc.clearJobGroup()
+
+
+def test_barriered_dedup_frames_start_no_job_at_build(spark, docs):
+    """``simhash_near_dup_pairs`` and ``exact_dup_weights`` share their
+    signature / fingerprint frame through the LAZY ``call_barrier``:
+    building either frame starts no Spark job; the kernels run at the
+    first action.
+
+    The one caveat is pinned here, not hidden: under adaptive execution
+    a checkpoint built over a shuffle runs that shuffle's map stage at
+    build time (barrier.py).  A SimHash input with fewer partitions than
+    the session's parallelism is spread by a repartition first, so its
+    build costs exactly the job a bare barrier over the spread input
+    costs — the signature kernel adds none."""
+    from wpvectordb_spark.barrier import call_barrier
+    from wpvectordb_spark.operators import dedup as D
+
+    sc = spark.sparkContext
+    corpus = _with_copies(docs)
+    # already spread: a local relation carries defaultParallelism slices
+    spread = spark.createDataFrame(corpus.collect(), corpus.schema)
+    assert spread.rdd.getNumPartitions() >= sc.defaultParallelism
+    builds = {
+        "exact_dup_weights": lambda: D.exact_dup_weights(corpus),
+        "simhash_near_dup_pairs": lambda: D.simhash_near_dup_pairs(
+            spread, max_hamming=3
+        ),
+    }
+    for name, build in builds.items():
+        df, n_jobs = _jobs_started(sc, build)
+        assert n_jobs == 0, (name, n_jobs)
+        _, n_jobs = _jobs_started(sc, df.collect)
+        assert n_jobs > 0, name
+
+    narrow = corpus.coalesce(1)
+    _, spread_jobs = _jobs_started(sc, lambda: call_barrier(D._spread(narrow)))
+    _, n_jobs = _jobs_started(
+        sc, lambda: D.simhash_near_dup_pairs(narrow, max_hamming=3)
+    )
+    assert n_jobs == spread_jobs <= 1, (n_jobs, spread_jobs)
 
 
 def test_index_builds_leave_cache_manager_alone(spark, tmp_path):

@@ -157,6 +157,7 @@ def test_simhash_recall_is_total(spark, docs):
     """Block-permutation candidates guarantee recall 1.0: every pair
     within max_hamming (by brute-force check over all signatures) is
     emitted, no matter WHICH bits differ."""
+    from wpvectordb_spark.functions import sketch_arrow as SA
     from wpvectordb_spark.functions import text as X
 
     sample = docs.where(F.col("doc_id") < 200)
@@ -164,7 +165,7 @@ def test_simhash_recall_is_total(spark, docs):
     sigs = {
         r["doc_id"]: r["s"]
         for r in sample.select(
-            "doc_id", X.srp_simhash(X.token_hashes("text")).alias("s")
+            "doc_id", SA.simhash_signature_arrow(X.token_hashes("text")).alias("s")
         ).collect()
         if r["s"] is not None
     }
@@ -1103,9 +1104,11 @@ def test_exact_dedup_hardening(spark):
     row = df.where(F.col("doc_id") == 1).select(
         X.fingerprint60("text").alias("f"),
         X.string_hash("text").alias("h1"),
-        X.string_hash2("text").alias("h2"),
     ).collect()[0]
-    assert row["f"] == row["h1"] * X.HASH_MOD2 + row["h2"]
+    h2 = 0
+    for c in "alpha":
+        h2 = (h2 * X.HASH_MUL2 + ord(c)) % X.HASH_MOD2
+    assert row["f"] == row["h1"] * X.HASH_MOD2 + h2
 
 
 def test_lsh_banding_guard_and_cc_id_type(spark):

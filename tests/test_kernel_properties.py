@@ -108,6 +108,7 @@ def test_hash_and_shingle_properties(spark, texts):
 @given(st.lists(st.integers(min_value=0, max_value=10**9), min_size=1, max_size=30))
 def test_minhash_monotone_under_superset(spark, hashes):
     """Adding elements can only lower (or keep) each minhash lane."""
+    from wpvectordb_spark.functions import sketch_arrow as SA
     from wpvectordb_spark.functions import text as X
 
     extra = [(h * 7 + 1) % X.HASH_MOD for h in hashes]
@@ -116,7 +117,7 @@ def test_minhash_monotone_under_superset(spark, hashes):
     )
     sigs = {
         r["id"]: r["sig"]
-        for r in df.select("id", X.minhash_signature("hs", 16).alias("sig")).collect()
+        for r in df.select("id", SA.minhash_signature_arrow("hs", 16).alias("sig")).collect()
     }
     assert all(b <= a for a, b in zip(sigs[1], sigs[2]))
 

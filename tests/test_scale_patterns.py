@@ -473,6 +473,52 @@ def test_round10_plan_shapes(spark):
     assert "Window" not in plan and "Join" not in plan, plan
 
 
+def test_operators_keep_one_barrier_and_one_sketch_engine():
+    """Static guard over wpvectordb_spark/operators/*.py (no Spark
+    session).  Shared intermediates go through ``barrier.call_barrier``:
+    a bare ``.localCheckpoint()`` is an eager job at call time that also
+    ignores ``spark.wpvectordb.barrier`` — allowed only in
+    ``connected_components``, whose per-round checkpoint exists to
+    truncate lineage.  And the text sketches have one engine: an
+    ``engine`` parameter is allowed only where both forms are registry
+    arms (``embedding_near_dup_pairs`` and its ``semantic_dedup``
+    pass-through)."""
+    import ast
+    import glob
+    import os
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    offenders = []
+
+    def visit(node, path, scope):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            scope = scope + [node.name]
+            args = node.args.posonlyargs + node.args.args + node.args.kwonlyargs
+            if any(a.arg == "engine" for a in args) and node.name not in (
+                "embedding_near_dup_pairs",
+                "semantic_dedup",
+            ):
+                offenders.append(f"{path}:{node.lineno} {node.name}(engine=)")
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "localCheckpoint"
+            and not node.args
+            and not node.keywords
+            and "connected_components" not in scope
+        ):
+            offenders.append(f"{path}:{node.lineno} bare .localCheckpoint()")
+        for child in ast.iter_child_nodes(node):
+            visit(child, path, scope)
+
+    paths = sorted(glob.glob(os.path.join(root, "wpvectordb_spark", "operators", "*.py")))
+    assert paths
+    for path in paths:
+        with open(path) as fh:
+            visit(ast.parse(fh.read()), os.path.relpath(path, root), [])
+    assert not offenders, offenders
+
+
 def test_global_windows_carry_bounded_annotation():
     """Every Window.orderBy WITHOUT a partitionBy is a single-partition
     sort — a scale-killer unless its input is provably bounded.  The

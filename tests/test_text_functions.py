@@ -6,8 +6,13 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from wpvectordb_spark.functions import sketch_arrow as SA
 from wpvectordb_spark.functions import text as X
 from tests.conftest import SF_DIR, assert_parity
+
+
+# lane 0 of minhash_coefficients (splitmix64 of lane indexes 0 and 1)
+PINNED_A0, PINNED_B0 = 60845732, 722909340
 
 
 @pytest.fixture(scope="module")
@@ -40,14 +45,20 @@ def test_minhash_is_min_of_rehashes(spark):
     df = spark.createDataFrame([("x y",)], "t string")
     row = df.select(
         X.token_hashes("t").alias("h"),
-        X.minhash_signature(X.token_hashes("t"), 4).alias("sig"),
+        SA.minhash_signature_arrow(X.token_hashes("t"), 4).alias("sig"),
     ).collect()[0]
     hs = row["h"]
     p = X.MINHASH_PRIME
+    a, b = X.minhash_coefficients(4)
     for i, s in enumerate(row["sig"]):
-        a = (X.MINHASH_A * (i + 1)) % p
-        b = (X.MINHASH_B * (i + 1) + 12345) % p
-        assert s == min((a * x + b) % p for x in hs)
+        assert s == min((a[i] * x + b[i]) % p for x in hs)
+    # the coefficient table is pinned (band indexes depend on it), prefix
+    # stable, defined for any lane count, and in range: a in [1, p), b in [0, p)
+    assert (a[0], b[0]) == (PINNED_A0, PINNED_B0)
+    big_a, big_b = X.minhash_coefficients(200)
+    assert big_a[:4] == a and big_b[:4] == b
+    assert len(set(big_a)) == 200
+    assert all(1 <= v < p for v in big_a) and all(0 <= v < p for v in big_b)
 
 
 def test_minhash_similar_texts_share_values(spark):
@@ -57,7 +68,7 @@ def test_minhash_similar_texts_share_values(spark):
          (3, "completely different words entirely elsewhere")],
         "id long, t string",
     )
-    sigs = {r["id"]: r["s"] for r in df.select("id", X.minhash_signature(X.token_hashes("t"), 32).alias("s")).collect()}
+    sigs = {r["id"]: r["s"] for r in df.select("id", SA.minhash_signature_arrow(X.token_hashes("t"), 32).alias("s")).collect()}
     overlap_12 = sum(a == b for a, b in zip(sigs[1], sigs[2]))
     overlap_13 = sum(a == b for a, b in zip(sigs[1], sigs[3]))
     assert overlap_12 > overlap_13
@@ -67,8 +78,8 @@ def test_minhash_similar_texts_share_values(spark):
 def test_empty_text_null_signatures(spark):
     df = spark.createDataFrame([("!!!",)], "t string")
     row = df.select(
-        X.minhash_signature(X.token_hashes("t"), 4).alias("sig"),
-        X.simhash(X.token_hashes("t")).alias("sh"),
+        SA.minhash_signature_arrow(X.token_hashes("t"), 4).alias("sig"),
+        SA.simhash_signature_arrow(X.token_hashes("t")).alias("sh"),
     ).collect()[0]
     assert row["sig"] is None and row["sh"] is None
 
@@ -80,8 +91,8 @@ def test_simhash_properties(spark):
          (3, "completely different words entirely elsewhere")],
         "id long, t string",
     )
-    sh = {r["id"]: r["s"] for r in df.select("id", X.simhash(X.token_hashes("t")).alias("s")).collect()}
-    assert all(0 <= v < 2**32 for v in sh.values())
+    sh = {r["id"]: r["s"] for r in df.select("id", SA.simhash_signature_arrow(X.token_hashes("t")).alias("s")).collect()}
+    assert all(0 <= v < 2**60 for v in sh.values())
     ham = lambda a, b: bin(a ^ b).count("1")
     assert ham(sh[1], sh[2]) < ham(sh[1], sh[3])
 
@@ -91,8 +102,8 @@ def test_fragments_parity_on_documents(spark, duck, docs):
         "doc_id",
         F.size(X.tokens("text")).alias("n_tokens"),
         X.string_hash("text").alias("fp"),
-        X.minhash_signature(X.token_hashes("text"), 8).alias("sig"),
-        X.simhash(X.token_hashes("text")).alias("sh"),
+        SA.minhash_signature_arrow(X.token_hashes("text"), 8).alias("sig"),
+        SA.simhash_signature_arrow(X.token_hashes("text")).alias("sh"),
         # DuckDB's list_distinct is unordered (Spark's array_distinct keeps
         # first occurrence): compare shingle SETS via sort.
         F.array_sort(X.shingles("text", 3)).alias("sh3"),
@@ -103,7 +114,7 @@ def test_fragments_parity_on_documents(spark, duck, docs):
                CAST(len({X.sql_tokens('text')}) AS INT) AS n_tokens,
                {X.sql_string_hash('text')} AS fp,
                {X.sql_minhash_signature(X.sql_token_hashes('text'), 8)} AS sig,
-               {X.sql_simhash(X.sql_token_hashes('text'))} AS sh,
+               {X.sql_srp_simhash(X.sql_token_hashes('text'))} AS sh,
                list_sort({X.sql_shingles('text', 3)}) AS sh3
         FROM documents WHERE doc_id < 40
         """

@@ -1,12 +1,23 @@
 """Call-scoped shared-intermediate barriers, with a cluster-mode
-escape hatch.
+escape hatch — the one barrier convention of the operators.
 
-Eight operators share an expensive internal frame across 2-3 consumers
-within one call (minhash shingles, span-detection window hashes, BM25's
-narrow frame, the unigram token explode, pack/budget/DSIR internals).
-Round 11 moved them from ``.persist()`` (a CacheManager entry the
-caller can never release) to LAZY ``localCheckpoint(eager=False)``:
-computed once at the first action, blocks GC'd with the frame.
+Nine operators share an expensive internal frame across 2-3 consumers
+within one call: the minhash shingle sets (``minhash_lsh_dedup_pairs``,
+``incremental_dedup_pairs``), the SimHash signatures, the span-detection
+window hashes, the exact-dup fingerprints, BM25's narrow frame, the
+unigram token explode, and the pack/DSIR internals.  Each goes through
+``call_barrier``: a LAZY ``localCheckpoint(eager=False)`` by default,
+computed once at the first action, blocks GC'd with the frame — not a
+``.persist()`` (a CacheManager entry the caller can never release) and
+not an eager checkpoint (a Spark job at call time, before the caller
+has asked for any result).
+
+One exception to "nothing runs at call time": with adaptive execution
+on, building the checkpoint of a frame that contains a shuffle runs that
+shuffle's map stage immediately (the adaptive plan is finalized to
+produce the checkpoint's RDD).  For the operators here that shuffle is
+an input repartition (``dedup._spread``, ``pack_sequences``' range
+split); the kernels above it still run at the first action.
 
 The trade (round-11 verdict item 4 / ADVICE): ``localCheckpoint``
 stores UNREPLICATED executor-local blocks and TRUNCATES lineage, so on

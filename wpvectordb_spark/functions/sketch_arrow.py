@@ -1,20 +1,19 @@
-"""Arrow/numpy fast paths for the sketch kernels.
+"""The sketch kernels: numpy over Arrow batches.
 
-The Catalyst HOF forms (functions.text.minhash_signature / simhash) are
-pure-JVM single folds — the right default for a long-running cluster where
-whole-stage/interpreted evaluation is JIT-warm.  But a fold that builds a
-32-lane array accumulator per element is exactly the shape the JVM takes
-longest to warm: a cold single-shot run (the bench, a one-off job) spends
-several seconds in C2 compilation of the interpreted evaluator before the
-arithmetic gets fast (measured: 6.8 s cold -> 1.7 s JIT-warm for the same
-MinHash pipeline at sf0.1).
+MinHash signatures, sign-random-projection SimHash and the ExactSubstr
+span-window hashes each have exactly one Spark implementation, here.  The
+inner arithmetic is one vectorized pass per batch (one
+``np.minimum.reduceat`` per permutation / one ``np.add.reduceat`` per
+bit chunk / k fold steps over the concatenated token hashes), fast from
+the first run — a Catalyst fold building a 32-lane array accumulator per
+element is the shape the JVM takes longest to warm (measured 6.8 s cold
+-> 1.7 s JIT-warm for the same MinHash pipeline at sf0.1).
 
-These variants move ONLY the inner arithmetic to numpy over Arrow batches
-(one `np.minimum.reduceat` per permutation / one `np.add.reduceat` per
-batch) and are BIT-IDENTICAL to the HOF forms — same constants, same
-modular arithmetic, same null-for-empty semantics — asserted by
-tests/test_sketch_arrow.py against the Catalyst kernels and by the driver's
-DuckDB oracle (which mirrors the HOF form in SQL).
+The reference for every kernel is its DuckDB mirror in functions.text
+(``sql_minhash_signature``, ``sql_srp_simhash``) or dedup
+(``_sql_span_cte``): same constants, same modular arithmetic, same
+null/empty semantics — asserted by tests/test_sketch_arrow.py and by the
+registry's DuckDB oracles.
 
 All int64 arithmetic stays in range: operands are < 2^31, so
 a * h + b < 2^62 < int64 max.
@@ -29,22 +28,29 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from wpvectordb_spark.functions.text import (
-    MINHASH_A,
-    MINHASH_B,
+    HASH_MOD,
+    HASH_MOD2,
+    HASH_MUL2,
     MINHASH_PRIME,
+    SRP_A,
+    SRP_B,
+    minhash_coefficients,
 )
 
 
-def _segments(values: pd.Series) -> tuple[np.ndarray, np.ndarray, list[int]]:
-    """Concatenate the non-null, non-empty array elements of an Arrow list
-    column batch.  Returns (concat, segment_start_offsets, source_rows)."""
+def _segments(
+    values: pd.Series, min_size: int = 1
+) -> tuple[np.ndarray, np.ndarray, list[int]]:
+    """Concatenate the non-null array elements of an Arrow list column
+    batch that hold at least ``min_size`` elements.  Returns (concat,
+    segment_start_offsets, source_rows)."""
     arrs: list[np.ndarray] = []
     rows: list[int] = []
     for j, v in enumerate(values):
         if v is None:
             continue
         a = np.asarray(v, dtype=np.int64)
-        if a.size == 0:
+        if a.size < min_size:
             continue
         arrs.append(a)
         rows.append(j)
@@ -57,12 +63,12 @@ def _segments(values: pd.Series) -> tuple[np.ndarray, np.ndarray, list[int]]:
 
 
 def minhash_signature_arrow(hashes: Column | str, num_hashes: int = 32) -> Column:
-    """Arrow form of functions.text.minhash_signature:
-    ``sig[i] = min over h of ((A*(i+1)) % P * h + (B*(i+1)+12345) % P) % P``
-    vectorized as one rehash + segmented min per permutation."""
-    i = np.arange(1, num_hashes + 1, dtype=np.int64)
-    a = (MINHASH_A * i) % MINHASH_PRIME
-    b = (MINHASH_B * i + 12345) % MINHASH_PRIME
+    """MinHash signature over a hash-array column:
+    ``sig[i] = min over h of (a[i] * h + b[i]) % P`` with the
+    ``functions.text.minhash_coefficients`` family, vectorized as one
+    rehash + segmented min per permutation.  NULL for empty or NULL
+    arrays."""
+    a, b = (np.array(c, dtype=np.int64) for c in minhash_coefficients(num_hashes))
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def _sig(hs: pd.Series) -> pd.Series:
@@ -80,14 +86,15 @@ def minhash_signature_arrow(hashes: Column | str, num_hashes: int = 32) -> Colum
     return _sig(hashes if isinstance(hashes, Column) else F.col(hashes))
 
 
-def srp_simhash_arrow(hashes: Column | str, bits: int = 60) -> Column:
-    """Arrow form of functions.text.srp_simhash: ``bits`` rehash-parity
-    sign votes per token, vectorized as one (tokens x bits) parity matrix
-    + segmented sum per batch.  Lane arithmetic: a*h < 2^62 stays in
-    int64."""
+def simhash_signature_arrow(hashes: Column | str, bits: int = 60) -> Column:
+    """Sign-random-projection SimHash (see ``functions.text.sql_srp_simhash``
+    for the definition): ``bits`` rehash-parity sign votes per token,
+    vectorized as one (tokens x bits) parity matrix + segmented sum per
+    batch.  NULL for empty or NULL arrays.  Lane arithmetic: a*h < 2^62
+    stays in int64."""
     i = np.arange(1, bits + 1, dtype=np.int64)
-    a = (MINHASH_A * i) % MINHASH_PRIME
-    b = (MINHASH_B * i + 54321) % MINHASH_PRIME
+    a = (SRP_A * i) % MINHASH_PRIME
+    b = (SRP_B * i + 54321) % MINHASH_PRIME
     exps = np.arange(bits, dtype=np.int64)
 
     @F.pandas_udf(T.LongType())
@@ -110,45 +117,20 @@ def srp_simhash_arrow(hashes: Column | str, bits: int = 60) -> Column:
     return _sh(hashes if isinstance(hashes, Column) else F.col(hashes))
 
 
-def simhash_arrow(hashes: Column | str, bits: int = 32) -> Column:
-    """Arrow form of functions.text.simhash: bit i of the output is the
-    sign of ``sum over token hashes of (2*bit_i(h) - 1)``; null for empty
-    token sets.  Token hashes are < 2^31, so ``>> i & 1`` equals the HOF
-    form's exact double division + truncating cast."""
-    exps = np.arange(bits, dtype=np.int64)
-
-    @F.pandas_udf(T.LongType())
-    def _sh(hs: pd.Series) -> pd.Series:
-        out: list[int | None] = [None] * len(hs)
-        concat, offsets, rows = _segments(hs)
-        if not rows:
-            return pd.Series(out, dtype=object)
-        contrib = (((concat[:, None] >> exps) & 1) * 2 - 1)  # N x bits in {-1,+1}
-        sums = np.add.reduceat(contrib, offsets, axis=0)  # docs x bits
-        packed = ((sums > 0).astype(np.int64) << exps).sum(axis=1)
-        for col, j in enumerate(rows):
-            out[j] = int(packed[col])
-        return pd.Series(out, dtype=object)
-
-    return _sh(hashes if isinstance(hashes, Column) else F.col(hashes))
-
-
 def span_window_hashes_arrow(token_hashes: Column | str, k: int) -> Column:
-    """Arrow form of the ExactSubstr window-hash fold in
-    ``dedup._span_detection``: for every k-token window of a document's
-    token-hash array, the packed ~60-bit hash
+    """The ExactSubstr window hashes of ``dedup._span_detection``: for
+    every k-token window of a document's token-hash array, the packed
+    ~60-bit hash
 
         h1 * HASH_MOD2 + h2
         h1 = fold over the window of (a * 31 + t) % HASH_MOD
         h2 = fold over the window of (a * HASH_MUL2 + t) % HASH_MOD2
 
-    BIT-IDENTICAL to the Catalyst ``transform(sequence(...),
-    i -> aggregate(slice(...)))`` form (same constants, same fold order,
-    same empty-array-for-short/NULL semantics) — asserted by
-    tests/test_sketch_arrow.py and the DuckDB oracle.  The HOF form
-    re-slices and re-folds per window (O(k * tokens) interpreted
-    lambda steps, ~16 modmuls/token at k=8); here the k fold steps are
-    k vectorized passes over the batch's concatenated token hashes.
+    ``[]`` (never NULL) for NULL rows and rows with fewer than k tokens;
+    exactly one window for a k-token row.  The k fold steps are k
+    vectorized passes over the batch's concatenated token hashes (a
+    per-window slice-and-fold would cost O(k) interpreted steps per
+    token).  Mirrored by ``dedup._sql_span_cte``.
 
     Range: token hashes are < HASH_MOD < 2^30, so
     h1 * 31 + t < 2^35 and h2 * 131 + t < 2^38 stay exact in int64;
@@ -156,29 +138,13 @@ def span_window_hashes_arrow(token_hashes: Column | str, k: int) -> Column:
     boundaries in the concatenation are computed and discarded
     (k - 1 waste rows per document — negligible).
     """
-    from wpvectordb_spark.functions.text import HASH_MOD, HASH_MOD2, HASH_MUL2
-
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def _ws(ths: pd.Series) -> pd.Series:
-        # [] (never NULL) for NULL/short rows — the HOF form's
-        # when(size >= k, fold).otherwise(array()) contract
+        # [] (never NULL) for NULL/short rows
         out: list[list[int]] = [[] for _ in range(len(ths))]
-        arrs: list[np.ndarray] = []
-        rows: list[int] = []
-        for j, v in enumerate(ths):
-            if v is None:
-                continue
-            a = np.asarray(v, dtype=np.int64)
-            if a.size < k:
-                continue
-            arrs.append(a)
-            rows.append(j)
+        concat, offsets, rows = _segments(ths, min_size=k)
         if not rows:
             return pd.Series(out)
-        lens = np.array([a.size for a in arrs], dtype=np.int64)
-        offsets = np.zeros(len(arrs), dtype=np.int64)
-        np.cumsum(lens[:-1], out=offsets[1:])
-        concat = np.concatenate(arrs)
         nw = concat.size - k + 1
         h1 = np.zeros(nw, dtype=np.int64)
         h2 = np.zeros(nw, dtype=np.int64)
@@ -187,9 +153,9 @@ def span_window_hashes_arrow(token_hashes: Column | str, k: int) -> Column:
             h1 = (h1 * 31 + seg) % HASH_MOD
             h2 = (h2 * HASH_MUL2 + seg) % HASH_MOD2
         ws = h1 * HASH_MOD2 + h2
-        for i, row in enumerate(rows):
-            o = int(offsets[i])
-            out[row] = ws[o : o + int(lens[i]) - k + 1].tolist()
+        ends = np.append(offsets[1:], concat.size) - k + 1
+        for row, lo, hi in zip(rows, offsets, ends):
+            out[row] = ws[lo:hi].tolist()
         return pd.Series(out)
 
     return _ws(

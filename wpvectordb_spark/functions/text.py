@@ -1,16 +1,17 @@
 """Text primitives for the LLM-data-pipeline operators: tokenization,
-portable deterministic hashing, shingles, MinHash / SimHash signatures.
+portable deterministic hashing, shingles and the MinHash / SimHash
+coefficient families.
 
-Everything is built from Catalyst higher-order functions so it runs
-JVM-side at scale, and every builder has an adjacent DuckDB SQL fragment
-producing identical values (the oracle contract).
+Tokenization and hashing are Catalyst higher-order functions, so they run
+JVM-side at scale; every Column function has an adjacent DuckDB SQL fragment
+producing identical values (the oracle contract).  The signature kernels
+themselves (MinHash, sign-random-projection SimHash) run in numpy over
+Arrow batches (functions.sketch_arrow); their DuckDB mirrors live here.
 
 Hashing is a 31-base polynomial rolling hash over Unicode code points,
 mod 1e9+7 — chosen over xxhash64/murmur because it is expressible
 identically in ANY engine (the oracle requirement); values stay < 2^30 so
 MinHash's affine rehash ``(a*x + b) % (2^31-1)`` never overflows signed 64.
-For pure-Spark pipelines where oracle parity is not needed, ``xxhash64`` is
-the faster path — see ``token_hashes_fast``.
 """
 
 from __future__ import annotations
@@ -83,17 +84,6 @@ def sql_string_hash(s: str) -> str:
 # operators advertise.  a*131 + c stays < 1.4e11, BIGINT-safe anywhere.
 HASH_MOD2 = 999_999_937
 HASH_MUL2 = 131
-
-
-def string_hash2(s: Column | str) -> Column:
-    """The second fold: ``h = fold(chars, h*131 + codepoint) % 999999937``."""
-    s = _col(s)
-    chars = F.filter(F.split(s, ""), lambda c: c != "")
-    return F.aggregate(
-        F.transform(chars, lambda c: F.ascii(c).cast("long")),
-        F.lit(0).cast("long"),
-        lambda a, c: (a * HASH_MUL2 + c) % HASH_MOD2,
-    )
 
 
 def sql_string_hash2(s: str) -> str:
@@ -240,12 +230,6 @@ def sql_shingle_hashes(th: str, k: int = 3) -> str:
     return f"CASE WHEN len({th}) > 0 THEN list_distinct({raw}) END"
 
 
-def token_hashes_fast(text: Column | str) -> Column:
-    """Scale path: 64-bit xxhash per token (JVM intrinsic, no char loop).
-    Not oracle-portable; use for production pipelines."""
-    return F.transform(tokens(text), lambda t: F.xxhash64(t))
-
-
 # --- hashed n-gram feature buckets (DSIR) ------------------------------------
 
 def ngram_buckets(hashes: Column | str, n_buckets: int = 4096) -> Column:
@@ -313,62 +297,52 @@ def sql_shingles(text: str, k: int = 3) -> str:
 
 # --- MinHash -----------------------------------------------------------------
 
-# Affine rehash coefficients: the multiplier must be LARGE so products wrap
-# mod p and destroy magnitude ordering (small multipliers like (2i+1) keep
-# the globally-smallest token hash the argmin of every rehash).  Knuth's
-# multiplicative constant scaled per hash index; a < p and x < 2^30 keep
-# a*x + b < 2^61, safe in signed 64 in any engine.
-MINHASH_A = 2_654_435_761
-MINHASH_B = 97_531
+_MASK64 = (1 << 64) - 1
 
 
-def minhash_signature(hashes: Column | str, num_hashes: int = 32) -> Column:
-    """MinHash signature: ``sig[i] = min over token hashes of
-    (a_i * h + b_i) % (2^31-1)`` with ``a_i = (K*(i+1)) % p`` (Knuth
-    multiplicative rehash).  Null for empty token sets.
+def _splitmix64(x: int) -> int:
+    z = (x + 0x9E3779B97F4A7C15) & _MASK64
+    z = ((z ^ (z >> 30)) * 0xBF58476D1CE4E5B9) & _MASK64
+    z = ((z ^ (z >> 27)) * 0x94D049BB133111EB) & _MASK64
+    return z ^ (z >> 31)
 
-    Shaped as ONE fold over the hash array (``aggregate`` with an
-    array accumulator) rather than ``num_hashes`` independent scans:
-    expressions referenced inside a higher-order-function lambda are
-    re-evaluated per element (Catalyst cannot CSE across lambda
-    boundaries), so the scan-per-hash shape recomputes the entire
-    upstream token/shingle hashing ``num_hashes`` times — 30-100x slower
-    on real documents.
-    """
-    hs = _col(hashes)
-    idx = F.sequence(F.lit(0), F.lit(num_hashes - 1))
-    init = F.transform(idx, lambda i: F.lit(MINHASH_PRIME).cast("long"))
-    # Empty-input detection happens in the FINISH lambda, not via
-    # `when(size(hs) > 0, ...)`: that guard would evaluate the entire
-    # upstream shingle/token pipeline a second time (no CSE across the
-    # expression tree).  Rehashed values are always < PRIME, so an
-    # untouched accumulator lane == PRIME iff the input was empty.
-    return F.aggregate(
-        hs,
-        init,
-        lambda acc, x: F.zip_with(
-            acc,
-            idx,
-            lambda m, i: F.least(
-                m,
-                (
-                    ((F.lit(MINHASH_A) * (i + 1)) % MINHASH_PRIME) * x
-                    + (F.lit(MINHASH_B) * (i + 1) + 12345) % MINHASH_PRIME
-                )
-                % MINHASH_PRIME,
-            ),
-        ),
-        lambda acc: F.when(
-            F.element_at(acc, 1) != MINHASH_PRIME, acc
-        ),
-    )
+
+def minhash_coefficients(num_hashes: int) -> tuple[list[int], list[int]]:
+    """The MinHash rehash family: ``sig[i] = min over h of
+    (a[i] * h + b[i]) % (2^31-1)``, with ``a[i]`` in [1, p) and ``b[i]``
+    in [0, p) drawn from splitmix64 of the lane index — deterministic,
+    defined for any ``num_hashes``, and prefix-stable (lane i's
+    coefficients do not depend on ``num_hashes``, so a shorter signature
+    is the prefix of a longer one).
+
+    Every lane has its OWN (a, b): the earlier family
+    ``a_i = K*(i+1), b_i = B*(i+1) + 12345`` was one base hash
+    ``K*x + B`` scaled by i, so the lanes were correlated (lane-agreement
+    variance 3x the binomial at Jaccard 0.875, and near-duplicates at
+    Jaccard 0.95 missed every 8x4 band ~0.8% of the time instead of
+    ~1e-6).  Band indexes written under that family (``lsh_band_index``
+    output, the streaming dedup state) hold different band keys and must
+    be rebuilt.  With a < 2^31 and token/shingle hashes < 2^30,
+    ``a*h + b < 2^62`` stays in signed 64 in any engine."""
+    a = [1 + _splitmix64(2 * i) % (MINHASH_PRIME - 1) for i in range(num_hashes)]
+    b = [_splitmix64(2 * i + 1) % MINHASH_PRIME for i in range(num_hashes)]
+    return a, b
 
 
 def sql_minhash_signature(hashes: str, num_hashes: int = 32) -> str:
+    """DuckDB mirror of ``sketch_arrow.minhash_signature_arrow``: the
+    coefficient table inlined as one constant list of (a, b) structs, so
+    the per-element rehash reads lane fields instead of re-indexing list
+    literals; NULL for empty or NULL hash lists.  The lambda variables
+    carry an ``mh_`` prefix because ``hashes`` may itself contain lambdas
+    (DuckDB resolves a shadowed inner variable against the outer one)."""
+    lanes = ", ".join(
+        f"{{'a': {x}::BIGINT, 'b': {y}::BIGINT}}"
+        for x, y in zip(*minhash_coefficients(num_hashes))
+    )
     sig = (
-        f"list_transform(range(0, {num_hashes}), i -> list_min(list_transform({hashes},"
-        f" x -> ((({MINHASH_A} * (i + 1)) % {MINHASH_PRIME}) * x"
-        f" + ({MINHASH_B} * (i + 1) + 12345) % {MINHASH_PRIME}) % {MINHASH_PRIME})))"
+        f"list_transform([{lanes}], mh_c -> list_min(list_transform({hashes},"
+        f" mh_x -> (mh_c.a * mh_x + mh_c.b) % {MINHASH_PRIME})))"
     )
     return f"CASE WHEN len({hashes}) > 0 THEN {sig} END"
 
@@ -384,134 +358,31 @@ def lsh_band_keys(signature: Column | str, bands: int, rows_per_band: int) -> Co
     )
 
 
-def sql_lsh_band_keys(signature: str, bands: int, rows_per_band: int) -> str:
-    return (
-        f"list_transform(range(0, {bands}), b -> array_to_string("
-        f"({signature})[b*{rows_per_band}+1 : b*{rows_per_band}+{rows_per_band}], '-'))"
-    )
-
-
 # --- SimHash -----------------------------------------------------------------
 
-def simhash(hashes: Column | str, bits: int = 32) -> Column:
-    """SimHash over token hashes: bit i of the output is the sign of
-    ``sum(+1 if bit i of token hash else -1)``; packed with the same
-    ``acc*2 + bit`` fold as sign codes.  Null for empty token sets.
-
-    Single fold over the hash array with a per-bit counter accumulator
-    (see minhash_signature for why the per-bit-scan shape is 30-100x
-    slower: lambda-captured subtrees re-evaluate per element).
-    """
-    hs = _col(hashes)
-    idx = F.sequence(F.lit(bits - 1), F.lit(0), F.lit(-1))  # MSB first
-    bit_of = lambda h, i: (h / F.pow(F.lit(2.0), i.cast("double"))).cast("long") % 2
-    # Element count rides in the accumulator so the empty-input guard does
-    # NOT re-evaluate the upstream token pipeline (same trick as
-    # minhash_signature's finish-lambda sentinel).
-    init = F.struct(
-        F.lit(0).cast("long").alias("n"),
-        F.transform(idx, lambda i: F.lit(0).cast("long")).alias("c"),
-    )
-
-    def merge(acc, h):
-        return F.struct(
-            (acc["n"] + 1).alias("n"),
-            F.zip_with(
-                acc["c"], idx, lambda c, i: c + F.when(bit_of(h, i) == 1, 1).otherwise(-1)
-            ).alias("c"),
-        )
-
-    def finish(acc):
-        packed = F.aggregate(
-            acc["c"],
-            F.lit(0).cast("long"),
-            lambda a, c: a * 2
-            + F.when(c > 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long")),
-        )
-        return F.when(acc["n"] > 0, packed)
-
-    return F.aggregate(hs, init, merge, finish)
-
-
-def srp_simhash(hashes: Column | str, bits: int = 60) -> Column:
-    """Sign-random-projection SimHash (Charikar, STOC'02) — ``bits``
-    INDEPENDENT fingerprint bits, unlike :func:`simhash`, whose bit i
-    reads bit i of the 30-bit token hash and therefore saturates at 30
-    useful bits.  Bit i is the sign of
-    ``sum over token hashes h of (2*parity_i(h) - 1)`` with
-    ``parity_i(h) = ((A*(i+1)) % P * h + (B*(i+1) + 54321) % P) % P % 2``
-    — the minhash rehash family with a distinct additive offset, reduced
-    mod 2 (P is odd, so the parity is unbiased).  60 bits keeps the
-    packed value < 2^60, positive in any engine's BIGINT (64-bit packing
-    would wrap the sign bit in Spark and overflow DuckDB).  Null for
-    empty token sets.
-
-    At web scale a 30-effective-bit fingerprint collides by birthday at
-    ~10^5 documents; Manku et al. (WWW'07) run 64-bit fingerprints for
-    8B pages — this is the same design point under the portable-hash
-    constraint.
-    """
-    hs = _col(hashes)
-    idx = F.sequence(F.lit(bits - 1), F.lit(0), F.lit(-1))  # MSB first
-    parity = lambda h, i: (
-        ((F.lit(MINHASH_A) * (i + 1)) % MINHASH_PRIME) * h
-        + (F.lit(MINHASH_B) * (i + 1) + 54321) % MINHASH_PRIME
-    ) % MINHASH_PRIME % 2
-    init = F.struct(
-        F.lit(0).cast("long").alias("n"),
-        F.transform(idx, lambda i: F.lit(0).cast("long")).alias("c"),
-    )
-
-    def merge(acc, h):
-        return F.struct(
-            (acc["n"] + 1).alias("n"),
-            F.zip_with(
-                acc["c"],
-                idx,
-                lambda c, i: c + F.when(parity(h, i) == 1, 1).otherwise(-1),
-            ).alias("c"),
-        )
-
-    def finish(acc):
-        packed = F.aggregate(
-            acc["c"],
-            F.lit(0).cast("long"),
-            lambda a, c: a * 2
-            + F.when(c > 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long")),
-        )
-        return F.when(acc["n"] > 0, packed)
-
-    return F.aggregate(hs, init, merge, finish)
+# Per-bit rehash constants of the sign-random-projection SimHash: Knuth's
+# multiplicative constant scaled per bit index.
+SRP_A = 2_654_435_761
+SRP_B = 97_531
 
 
 def sql_srp_simhash(hashes: str, bits: int = 60) -> str:
-    """DuckDB mirror of :func:`srp_simhash` — same rehash-parity votes,
-    same MSB-first pack."""
+    """DuckDB mirror of ``sketch_arrow.simhash_signature_arrow`` — the
+    sign-random-projection SimHash (Charikar, STOC'02): bit i is the sign
+    of ``sum over token hashes h of (2*parity_i(h) - 1)`` with
+    ``parity_i(h) = ((A*(i+1)) % P * h + (B*(i+1) + 54321) % P) % P % 2``
+    (P is odd, so the parity is unbiased), packed MSB first.  ``bits``
+    independent bits; 60 keeps the packed value < 2^60, positive in any
+    engine's BIGINT.  NULL for empty or NULL hash lists."""
     parity = (
-        f"(((({MINHASH_A} * (i + 1)) % {MINHASH_PRIME}) * h"
-        f" + ({MINHASH_B} * (i + 1) + 54321) % {MINHASH_PRIME})"
+        f"(((({SRP_A} * (i + 1)) % {MINHASH_PRIME}) * h"
+        f" + ({SRP_B} * (i + 1) + 54321) % {MINHASH_PRIME})"
         f" % {MINHASH_PRIME}) % 2"
     )
     bits_arr = (
         f"list_transform(range({bits - 1}, -1, -1), i -> CASE WHEN"
         f" list_reduce(list_prepend(0, list_transform({hashes},"
         f" h -> CASE WHEN {parity} = 1 THEN 1 ELSE -1 END)), (a, b) -> a + b) > 0"
-        " THEN 1::BIGINT ELSE 0::BIGINT END)"
-    )
-    return (
-        f"CASE WHEN len({hashes}) > 0 THEN"
-        f" list_reduce({bits_arr}, (a, b) -> a * 2 + b) END"
-    )
-
-
-def sql_simhash(hashes: str, bits: int = 32) -> str:
-    # floor before cast: DuckDB CAST(double AS BIGINT) rounds, Spark's cast
-    # truncates — floor makes both truncate identically for positive h.
-    bit_of = "CAST(floor(h / power(2, i)) AS BIGINT) % 2"
-    bits_arr = (
-        f"list_transform(range({bits - 1}, -1, -1), i -> CASE WHEN"
-        f" list_reduce(list_prepend(0, list_transform({hashes},"
-        f" h -> CASE WHEN {bit_of} = 1 THEN 1 ELSE -1 END)), (a, b) -> a + b) > 0"
         " THEN 1::BIGINT ELSE 0::BIGINT END)"
     )
     return (

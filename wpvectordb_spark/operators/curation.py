@@ -1632,7 +1632,6 @@ def decontaminate_spans(
     id_col: str = "doc_id",
     text_col: str = "text",
     broadcast_holdout: bool = True,
-    engine: str | None = None,
 ) -> DataFrame:
     """Span-level decontamination: REDACT every run of >= ``k``
     consecutive tokens that also occurs in the holdout/eval set, instead
@@ -1660,23 +1659,16 @@ def decontaminate_spans(
     Returns ``(id, n_tokens, n_kept, text)`` for every corpus document;
     untouched documents round-trip with ``n_kept == n_tokens``.
     """
-    from wpvectordb_spark.operators.dedup import (
-        DEFAULT_SKETCH_ENGINE,
-        _cut_rewrite,
-        _span_detection,
-    )
+    from wpvectordb_spark.operators.dedup import _cut_rewrite, _span_detection
 
-    if engine is None:
-        engine = DEFAULT_SKETCH_ENGINE
     base, wins, _ = _span_detection(
-        docs, k, 2, id_col, text_col, carry_tokens=True, engine=engine
+        docs, k, 2, id_col, text_col, carry_tokens=True
     )
     # min_docs=1 makes the detection's >= min_docs distinct-doc filter a
     # no-op: its dup_hashes output IS the holdout's distinct hash set
     # (persist=False: the holdout base has exactly one consumer)
     _, _, hold_h = _span_detection(
-        holdout, k, 1, id_col, text_col, carry_tokens=False, persist=False,
-        engine=engine,
+        holdout, k, 1, id_col, text_col, carry_tokens=False, persist=False
     )
     if broadcast_holdout:
         hold_h = F.broadcast(hold_h)

@@ -37,21 +37,9 @@ DEFAULT_NUM_HASHES = 32
 DEFAULT_BANDS = 8
 DEFAULT_ROWS_PER_BAND = 4
 
-# Signature kernels come in two bit-identical engines (see
-# functions.sketch_arrow): "arrow" (numpy over Arrow batches — fast from
-# the first run, the default) and "catalyst" (pure-JVM HOF fold — zero
-# Python workers, preferable on a JIT-warm long-running cluster).
-DEFAULT_SKETCH_ENGINE = "arrow"
-
 # Monotone counter for default observe() metric names (Spark rejects
 # duplicate observed-metric names within one plan).
 _GUARD_SEQ = 0
-
-
-def _mh_sig(col: F.Column, num_hashes: int, engine: str) -> F.Column:
-    if engine == "arrow":
-        return SA.minhash_signature_arrow(col, num_hashes)
-    return X.minhash_signature(col, num_hashes)
 
 
 def _spread(df: DataFrame) -> DataFrame:
@@ -248,7 +236,6 @@ def minhash_signatures(
     text_col: str = "text",
     num_hashes: int = DEFAULT_NUM_HASHES,
     shingle_k: int = 3,
-    engine: str = DEFAULT_SKETCH_ENGINE,
 ) -> DataFrame:
     """(doc_id, signature) — minhash over distinct hashed k-token shingles.
 
@@ -258,7 +245,7 @@ def minhash_signatures(
     hashed = X.shingle_hashes(text_col, shingle_k)
     return _spread(docs).select(
         F.col(id_col),
-        _mh_sig(hashed, num_hashes, engine).alias("signature"),
+        SA.minhash_signature_arrow(hashed, num_hashes).alias("signature"),
     )
 
 
@@ -503,7 +490,6 @@ def minhash_lsh_dedup_pairs(
     bands: int | None = None,
     rows_per_band: int | None = None,
     shingle_k: int = 3,
-    engine: str = DEFAULT_SKETCH_ENGINE,
     persist: bool = True,
     auto_tune: bool = False,
 ) -> DataFrame:
@@ -561,7 +547,7 @@ def minhash_lsh_dedup_pairs(
         # lazy call-scoped barrier, GC-released (see docstring)
         sh = call_barrier(sh)
     sigs = sh.select(
-        F.col(id_col), _mh_sig(F.col("sh"), num_hashes, engine).alias("signature")
+        F.col(id_col), SA.minhash_signature_arrow(F.col("sh"), num_hashes).alias("signature")
     )
     cands = lsh_candidate_pairs(sigs, id_col, bands, rows_per_band)
     return _jaccard_verify(cands, sh, sh, threshold, id_col)
@@ -575,7 +561,6 @@ def lsh_band_index(
     bands: int = DEFAULT_BANDS,
     rows_per_band: int = DEFAULT_ROWS_PER_BAND,
     shingle_k: int = 3,
-    engine: str = DEFAULT_SKETCH_ENGINE,
 ) -> DataFrame:
     """(id, band_id, band_key) — the persisted banded index of the
     production incremental-dedup layout (write ``partitionBy(band_id)``
@@ -583,11 +568,14 @@ def lsh_band_index(
     the corpus side's signatures are computed once per document EVER,
     not once per increment).  Accepts raw docs or a precomputed (id, sh)
     shingle index.  NULL band keys (empty/short docs) are dropped here —
-    they can never match an equi-join and would only bloat the index."""
+    they can never match an equi-join and would only bloat the index.
+    Band keys depend on ``text.minhash_coefficients``: an index written
+    before its per-lane family replaced the correlated one holds keys the
+    current signatures never produce, so rebuild it."""
     _check_banding(num_hashes, bands, rows_per_band)
     sh = _shingle_side(docs, id_col, text_col, shingle_k)
     sigs = sh.select(
-        F.col(id_col), _mh_sig(F.col("sh"), num_hashes, engine).alias("signature")
+        F.col(id_col), SA.minhash_signature_arrow(F.col("sh"), num_hashes).alias("signature")
     )
     keys = F.posexplode(X.lsh_band_keys("signature", bands, rows_per_band))
     return sigs.select(F.col(id_col), keys.alias("band_id", "band_key")).where(
@@ -605,7 +593,6 @@ def incremental_dedup_pairs(
     bands: int = DEFAULT_BANDS,
     rows_per_band: int = DEFAULT_ROWS_PER_BAND,
     shingle_k: int = 3,
-    engine: str = DEFAULT_SKETCH_ENGINE,
     corpus_bands: DataFrame | None = None,
 ) -> DataFrame:
     """Near-dups of a NEW batch against an EXISTING corpus — the
@@ -652,7 +639,8 @@ def incremental_dedup_pairs(
 
     def _banded(sh: DataFrame, out: str) -> DataFrame:
         sigs = sh.select(
-            F.col(id_col), _mh_sig(F.col("sh"), num_hashes, engine).alias("signature")
+            F.col(id_col),
+            SA.minhash_signature_arrow(F.col("sh"), num_hashes).alias("signature"),
         )
         # NULL band keys DO survive the explode (lsh_band_keys yields an
         # array of NULL elements, not a NULL array) — they are safe here
@@ -660,7 +648,7 @@ def incremental_dedup_pairs(
         # A groupBy/bucket rewrite of this path would collect them into
         # one hot NULL bucket per band and must filter band_key IS NOT
         # NULL after the explode (see lsh_candidate_pairs; a pre-explode
-        # signature filter would double-evaluate the Arrow-engine UDF).
+        # signature filter would double-evaluate the signature UDF).
         keys = F.posexplode(X.lsh_band_keys("signature", bands, rows_per_band))
         return sigs.select(F.col(id_col).alias(out), keys.alias("band_id", "band_key"))
 
@@ -686,20 +674,17 @@ def simhash_near_dup_pairs(
     max_hamming: int = 3,
     id_col: str = "doc_id",
     text_col: str = "text",
-    engine: str = DEFAULT_SKETCH_ENGINE,
     bits: int = SIMHASH_BITS,
-    eager_signatures: bool = False,
 ) -> DataFrame:
     """SimHash near-dup: ALL pairs within ``max_hamming`` bits of each
     other — recall 1.0, guaranteed.
 
     Signatures are ``bits``-bit sign-random-projection fingerprints
-    (functions.text.srp_simhash): 60 independent bits by default.  The
-    earlier 32-bit token-bit form (functions.text.simhash) only carries
-    ~30 useful bits — on a 5k-doc synthetic corpus hamming<=3 matched
-    1.6M pairs (avg degree 646), and at web scale it collides by
-    birthday at ~10^5 docs; Manku et al. run 64-bit fingerprints for 8B
-    pages.
+    (sketch_arrow.simhash_signature_arrow): 60 independent bits by default.  A
+    token-bit SimHash carries only ~30 useful bits (the token hashes are
+    30-bit) — on a 5k-doc synthetic corpus hamming<=3 matched 1.6M pairs
+    (avg degree 646), and at web scale it collides by birthday at ~10^5
+    docs; Manku et al. run 64-bit fingerprints for 8B pages.
 
     Candidate generation is the standard block-permutation argument
     (Manku et al., WWW'07): split the signature into ``max_hamming + 1``
@@ -715,36 +700,24 @@ def simhash_near_dup_pairs(
     form runs a B^2 loop inside ONE task (measured 5x slower on
     boilerplate-heavy corpora).
 
-    ``eager_signatures=True`` localCheckpoints the 16-byte/row
-    (id, simhash) frame before banding, so the signature kernel runs
-    ONCE instead of once per join side: 8.4 -> 1.35 s at 5k docs with
-    the Arrow engine — the double Arrow round-trip, not the join, was
-    the floor (PERFORMANCE.md item 63; this REVISES the earlier
-    "recompute is cheaper than a barrier" claim, which held only for
-    the Catalyst single-fold engine at small sizes).  At 80k docs the
-    two forms tie within host noise, and the checkpointed frame is
-    signatures only, never text.  It is OPT-IN (default False) because
-    a localCheckpoint fires a Spark job AT CALL TIME — an eager default
-    would surprise composing callers building plans they may never
-    execute — and pins the frame to executor-local storage that is
-    lost on executor decommission (ADVICE round 8); run-now call sites
-    (the entry registry, bench) pass True explicitly."""
+    The 16-byte/row (id, simhash) frame feeds both join sides, so it
+    goes through the call-scoped ``barrier.call_barrier``: the signature
+    kernel runs once instead of once per side (5,500 docs, local[4]:
+    2.2-2.6 s without a barrier, 0.9-1.2 s with the lazy barrier or an
+    eager ``localCheckpoint``).  The kernel runs at the
+    first action, not at call time, and the stored frame holds
+    signatures only, never text."""
     n_blocks = max_hamming + 1
     block_bits = bits // n_blocks
-    sim = (
-        SA.srp_simhash_arrow(X.token_hashes(text_col), bits)
-        if engine == "arrow"
-        else X.srp_simhash(X.token_hashes(text_col), bits)
-    )
     # No null-signature filter: a null simhash yields null block keys,
     # which never match the equi-join below — and an isNotNull filter on a
     # Python-UDF column would stack a second ArrowEvalPython evaluation.
-    sh = _spread(docs).select(
-        F.col(id_col),
-        sim.alias("simhash"),
+    sh = call_barrier(
+        _spread(docs).select(
+            F.col(id_col),
+            SA.simhash_signature_arrow(X.token_hashes(text_col), bits).alias("simhash"),
+        )
     )
-    if eager_signatures:
-        sh = sh.localCheckpoint()
     # block values via integer div + mod (not bit ops): ports exactly to
     # any oracle engine's `//` and `%`.  Block 0 is the HIGH bits; the last
     # block absorbs the remainder when 32 % n_blocks != 0.
@@ -1074,7 +1047,7 @@ def embedding_near_dup_pairs(
     id_col: str = "vec_id",
     vector_col: str = "embedding",
     block_col: str | None = None,
-    engine: str = DEFAULT_SKETCH_ENGINE,
+    engine: str = "arrow",
 ) -> DataFrame:
     """Embedding-cosine near-dup: pairs with cosine >= threshold.
 
@@ -1121,7 +1094,7 @@ def semantic_dedup(
     id_col: str = "vec_id",
     vector_col: str = "embedding",
     centroids: DataFrame | None = None,
-    engine: str = DEFAULT_SKETCH_ENGINE,
+    engine: str = "arrow",
 ) -> DataFrame:
     """SemDeDup-style semantic dedup (Abbas et al., arXiv:2303.09540):
     cluster the embeddings, compare pairs only WITHIN a cluster, and drop
@@ -1187,7 +1160,6 @@ def duplicate_span_stats(
     min_docs: int = 2,
     id_col: str = "doc_id",
     text_col: str = "text",
-    engine: str = DEFAULT_SKETCH_ENGINE,
 ) -> DataFrame:
     """ExactSubstr-style duplicate-span detection (Lee et al., "Deduplicating
     Training Data Makes Language Models Better", ACL'22): find spans of
@@ -1220,7 +1192,7 @@ def duplicate_span_stats(
     never shuffles — only (hash, doc, pos) triples.
     """
     base, wins, dup_hashes = _span_detection(
-        docs, k, min_docs, id_col, text_col, carry_tokens=False, engine=engine
+        docs, k, min_docs, id_col, text_col, carry_tokens=False
     )
     dup_wins = wins.join(dup_hashes, "h", "left_semi")
     merge = (
@@ -1252,7 +1224,6 @@ def _span_detection(
     text_col: str,
     carry_tokens: bool,
     persist: bool = True,
-    engine: str = DEFAULT_SKETCH_ENGINE,
 ):
     """The ONE detection pipeline shared by ``duplicate_span_stats`` and
     ``remove_duplicate_spans`` (a fold/guard tweak changes exactly one
@@ -1266,23 +1237,15 @@ def _span_detection(
     cut rewrite).  ``persist=False`` skips the barrier for
     single-consumer uses (the holdout side of span decontamination reads
     ``base`` exactly once — a barrier would only pin dead executor
-    memory)."""
-    from wpvectordb_spark.functions.text import HASH_MOD, HASH_MOD2, HASH_MUL2
+    memory).
 
-    # ~60-bit window hash: TWO independent folds packed into one BIGINT
-    # (h31 * 999999937 + h131, < 1.1e18).  A single 30-bit window hash
-    # collides by pigeonhole once the corpus holds more distinct windows
-    # than the 1e9 hash space (~10 GB of text) — unrelated windows would
-    # then be flagged duplicated, and remove_duplicate_spans would CUT
-    # the collided text irreversibly, with no verify stage to catch it.
-    fold = (
-        f"transform(sequence(0, size(_th) - {k}), i -> "
-        f"aggregate(slice(_th, i + 1, {k}), CAST(0 AS LONG), "
-        f"(a, t) -> (a * 31 + t) % {HASH_MOD})"
-        f" * CAST({HASH_MOD2} AS LONG)"
-        f" + aggregate(slice(_th, i + 1, {k}), CAST(0 AS LONG), "
-        f"(a, t) -> (a * {HASH_MUL2} + t) % {HASH_MOD2}))"
-    )
+    Window hashes are ~60-bit: TWO independent folds packed into one
+    BIGINT (sketch_arrow.span_window_hashes_arrow).  A single 30-bit
+    window hash collides by pigeonhole once the corpus holds more
+    distinct windows than the 1e9 hash space (~10 GB of text) —
+    unrelated windows would then be flagged duplicated, and
+    remove_duplicate_spans would CUT the collided text irreversibly,
+    with no verify stage to catch it."""
     if carry_tokens:
         hashed = (
             _spread(docs)
@@ -1299,24 +1262,9 @@ def _span_detection(
             F.col(id_col), X.token_hashes(text_col).alias("_th")
         )
         keep = [F.col(id_col)]
-    # window-hash engine (same convention as the minhash signatures):
-    # "arrow" computes the identical fold in numpy over Arrow batches;
-    # "catalyst" keeps the pure-JVM HOF form for JIT-warm clusters.
-    # The HOF form pays ~2k interpreted slice-fold steps per token
-    # (k=8); at bench scale (~50-token docs) the fold is only ~0.5 s of
-    # the ~2.2 s cut key — a measured WASH locally (round 12, probe in
-    # OPTIMIZATION_r12.md) — but the per-token cost is constant in
-    # document length, so the vectorized form is the scale default for
-    # the long-document corpora this pipeline exists for (guide §4.2).
-    # Bit-equality is pinned by tests/test_sketch_arrow.py.
-    if engine == "arrow":
-        ws = SA.span_window_hashes_arrow(F.col("_th"), k)
-    else:
-        ws = (
-            F.when(F.size("_th") >= k, F.expr(fold))
-            .otherwise(F.array().cast("array<long>"))
-        )
-    base = hashed.select(*keep, ws.alias("_ws"))
+    base = hashed.select(
+        *keep, SA.span_window_hashes_arrow(F.col("_th"), k).alias("_ws")
+    )
     if persist:
         # lazy call-scoped barrier, GC-released — not a CacheManager
         # entry the caller has no handle to (round-10 verdict item 2)
@@ -1404,7 +1352,6 @@ def remove_duplicate_spans(
     min_docs: int = 2,
     id_col: str = "doc_id",
     text_col: str = "text",
-    engine: str = DEFAULT_SKETCH_ENGINE,
 ) -> DataFrame:
     """The CUT step of ExactSubstr dedup (Lee et al., ACL'22): rewrite
     every document with its duplicated spans removed — the actual output
@@ -1429,7 +1376,7 @@ def remove_duplicate_spans(
     of interval lists.
     """
     base, wins, dup_hashes = _span_detection(
-        docs, k, min_docs, id_col, text_col, carry_tokens=True, engine=engine
+        docs, k, min_docs, id_col, text_col, carry_tokens=True
     )
     dup_wins = wins.join(dup_hashes, "h", "left_semi")
     return _cut_rewrite(base, dup_wins, k, id_col, text_col)
@@ -1732,7 +1679,6 @@ def exact_dup_weights(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    eager_fingerprints: bool = False,
 ) -> DataFrame:
     """Soft-dedup weights from EXACT-duplicate clusters in one call:
     fingerprint the corpus, treat each fingerprint group as a component
@@ -1748,18 +1694,15 @@ def exact_dup_weights(
     Returns ``(id, cluster_size, weight)`` covering every input row.
 
     The fingerprint frame fans out to its own group aggregation AND the
-    member join; ``eager_fingerprints=True`` localCheckpoints it so the
-    O(doc) fold runs once, not once per reference (measured 7.4 ->
-    ~2 s at sf0.1).  OPT-IN, not the default: a call-time barrier fires
-    a Spark job, which surprises composing callers building plans they
-    may never execute (the ``eager_signatures`` rationale, ADVICE round
-    9) — run-now call sites (entry arms, bench) pass ``True``; lazy
-    composition pays the bounded double-fold instead."""
-    fps = docs.where(F.col(text_col).isNotNull()).select(
-        F.col(id_col), X.fingerprint60(text_col).alias("_f")
+    member join, so it goes through ``barrier.call_barrier``: the O(doc)
+    fold runs once, not once per reference (``curate_weighted_sample``
+    at sf0.1, local[4], which wraps this call: 7.1-7.4 s without the
+    barrier, 2.1-2.6 s with it)."""
+    fps = call_barrier(
+        docs.where(F.col(text_col).isNotNull()).select(
+            F.col(id_col), X.fingerprint60(text_col).alias("_f")
+        )
     )
-    if eager_fingerprints:
-        fps = fps.localCheckpoint()
     comp = fps.join(
         fps.groupBy("_f").agg(F.min(id_col).alias("component_id")), "_f"
     ).select(id_col, "component_id")

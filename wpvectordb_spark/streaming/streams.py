@@ -402,6 +402,9 @@ def stream_dedup_ingest(
     either within one batch (a) or across two batches, in which case the
     earlier doc is in the index when the later one arrives (b).  Pairs
     are normalized to id_a < id_b so batch arrival order is irrelevant.
+    The guarantee holds only if every band key in the state came from the
+    current ``text.minhash_coefficients`` family: state written before
+    that family replaced the correlated one must be rebuilt.
 
     State writes are EXACTLY-ONCE under foreachBatch's replay semantics
     (test-asserted): every table writes its batch delta to a
