@@ -640,7 +640,7 @@ def _stream_queue_state(spark: SparkSession, sf_dir: str) -> DataFrame:
                 bid,
                 QUEUE_NOW,
             )
-        final = os.path.join(root, f"v{ST._queue_state_versions(root)[-1]}")
+        final = os.path.join(root, f"v{ST._queue_state_versions(spark, root)[-1]}")
         return spark.read.parquet(final).localCheckpoint()
     finally:
         shutil.rmtree(root, ignore_errors=True)

@@ -11,8 +11,14 @@ from pyspark.sql import functions as F
 from wpvectordb_spark.table import VectorTable, VectorTableQueue
 
 
-def test_vector_table_lifecycle(spark, tmp_path):
-    vt = VectorTable(spark, str(tmp_path / "vectors"), vector_length=4)
+def _as_uri(path: str) -> str:
+    """The single-slash ``file:`` URI form Hadoop and Spark print for a
+    local path — state must behave identically under both spellings."""
+    return "file:" + path
+
+
+def _check_vector_table_lifecycle(spark, path: str) -> None:
+    vt = VectorTable(spark, path, vector_length=4)
     vt.init()
     assert vt.table_exists()
     assert vt.get_vector_count() == 0
@@ -49,6 +55,14 @@ def test_vector_table_lifecycle(spark, tmp_path):
     assert not vt.table_exists()
 
 
+def test_vector_table_lifecycle(spark, tmp_path):
+    _check_vector_table_lifecycle(spark, str(tmp_path / "vectors"))
+
+
+def test_vector_table_lifecycle_file_uri(spark, tmp_path):
+    _check_vector_table_lifecycle(spark, _as_uri(str(tmp_path / "vectors")))
+
+
 def test_vector_table_replacement_semantics(spark, tmp_path):
     vt = VectorTable(spark, str(tmp_path / "v2"), vector_length=2)
     vt.init()
@@ -58,8 +72,8 @@ def test_vector_table_replacement_semantics(spark, tmp_path):
     assert vt.get_all_for_post(7).count() == 1
 
 
-def test_queue_lifecycle(spark, tmp_path):
-    q = VectorTableQueue(spark, str(tmp_path / "queue"))
+def _check_queue_lifecycle(spark, path: str) -> None:
+    q = VectorTableQueue(spark, path)
     q.init()
     t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
 
@@ -88,49 +102,147 @@ def test_queue_lifecycle(spark, tmp_path):
     assert page.count() == 2
 
 
-def test_snapshot_swap_is_crash_safe(spark, tmp_path):
-    """At every instant of a snapshot rewrite, at least one full copy of
-    the table exists on disk (old or new) — the delete-then-rename order
-    lost the table if the process died in the gap, and init() would then
-    recreate it EMPTY."""
-    import os
+def test_queue_lifecycle(spark, tmp_path):
+    _check_queue_lifecycle(spark, str(tmp_path / "queue"))
 
-    from wpvectordb_spark import table as TBL
 
-    path = str(tmp_path / "t")
-    df1 = spark.createDataFrame([(1,)], "x long")
-    df2 = spark.createDataFrame([(2,)], "x long")
-    TBL._write_snapshot(path, df1)
-    real_rename = os.rename
-    seen = []
+def test_queue_lifecycle_file_uri(spark, tmp_path):
+    _check_queue_lifecycle(spark, _as_uri(str(tmp_path / "queue")))
 
-    def spy(a, b):
-        # before each rename, SOME readable copy of the data must exist
-        seen.append(
-            os.path.exists(path) or os.path.exists(path + "__old")
-            or os.path.exists(path + "__staging")
+
+class _Killed(Exception):
+    """The simulated process death at a swap boundary."""
+
+
+# each boundary of fsutil.replace_dir -> (the fsutil call that dies,
+# which of its path arguments marks the boundary)
+_KILL_POINTS = {
+    # the live copy is about to be moved aside: staging is built, live intact
+    "before_aside": ("rename", lambda src, dst: dst.endswith("__old")),
+    # live moved aside, staging not yet promoted: the only copy is __old
+    "between_renames": ("rename", lambda src, dst: src.endswith("__staging")),
+    # promoted, the old copy not yet dropped: live + stale __old
+    "before_drop": ("delete", lambda p: p.endswith("__old")),
+}
+
+
+def _facade_site(spark, path):
+    vt = VectorTable(spark, path, vector_length=2)
+    vt.init()
+    vt.insert_all(1, [[1.0, 0.0]])
+
+    def read():  # a facade read recovers first
+        return sorted((r["post_id"], r["sequence_no"]) for r in vt.get_all().collect())
+
+    return lambda: vt.insert_all(2, [[0.0, 1.0]]), read, [(1, 0), (2, 0)]
+
+
+def _compact_site(partitioned):
+    def site(spark, path):
+        from wpvectordb_spark.operators import maintenance as M
+
+        df = spark.range(40).withColumn("b", (F.col("id") % 2).cast("int"))
+        writer = df.repartition(4).write
+        (writer.partitionBy("b") if partitioned else writer).parquet(path)
+        rows = sorted(r["id"] for r in df.collect())
+        compact = M.compact_partitioned_table if partitioned else M.compact_table
+
+        def read():  # the standalone-table recovery entry point
+            M.recover_table(spark, path)
+            got = sorted(r["id"] for r in spark.read.parquet(path).collect())
+            return M.table_file_stats(spark, path)["n_files"], got
+
+        # the rewrite packs one file per partition dir (or one in total)
+        new = (2 if partitioned else 1), rows
+        return lambda: compact(spark, path, target_file_bytes=1 << 40), read, new
+
+    return site
+
+
+def _retrain_site(spark, path):
+    from wpvectordb_spark.operators import similarity as SIM
+
+    base = [(i, [1.0, 0.0]) for i in range(6)] + [
+        (10 + i, [0.0, 1.0]) for i in range(6)
+    ] + [(20 + i, [0.6, 0.8]) for i in range(4)]
+    SIM.build_ivf_index(
+        spark.createDataFrame(base, "vec_id long, embedding array<double>"),
+        path,
+        n_clusters=2,
+    )
+    q = spark.createDataFrame(
+        [(0, [1.0, 0.0])], "query_id long, query_vector array<double>"
+    )
+
+    def read():  # a measurement-only loop run recovers first
+        SIM.retrain_ivf_index(spark, path, q, threshold=0.0, k=3, n_probe=1, rebuild=False)
+        ids = sorted(r["vec_id"] for r in spark.read.parquet(f"{path}/vectors").collect())
+        return spark.read.parquet(f"{path}/centroids").count(), ids
+
+    def crash():  # threshold above any recall: always flags, rebuilds 3 cells
+        SIM.retrain_ivf_index(
+            spark, path, q, threshold=1.1, k=3, n_probe=1, n_clusters=3
         )
-        real_rename(a, b)
 
-    os.rename = spy
-    try:
-        TBL._write_snapshot(path, df2)
-    finally:
-        os.rename = real_rename
-    assert seen and all(seen)
-    assert [r["x"] for r in spark.read.parquet(path).collect()] == [2]
-    assert not os.path.exists(path + "__old")
+    return crash, read, (3, sorted(i for i, _ in base))
+
+
+_KILL_SITES = {
+    "facade": _facade_site,
+    "compact_table": _compact_site(partitioned=False),
+    "compact_partitioned_table": _compact_site(partitioned=True),
+    "retrain_ivf_index": _retrain_site,
+}
+
+
+@pytest.mark.parametrize("form", ["plain", "file_uri"])
+@pytest.mark.parametrize("boundary", sorted(_KILL_POINTS))
+@pytest.mark.parametrize("site", sorted(_KILL_SITES))
+def test_replace_dir_kill_points(spark, tmp_path, monkeypatch, site, boundary, form):
+    """Kill-point matrix over the one swap (fsutil.replace_dir): a
+    process death at each rename boundary, at every call site, on a
+    plain path and a file: URI, must leave data the NEXT call recovers
+    to exactly one live copy — the old one if the promote never
+    happened, the new one after it — with no __old left behind.  The
+    unpromoted staging copy stays until the next swap clears it."""
+    from wpvectordb_spark import fsutil
+
+    local = str(tmp_path / "t")
+    path = local if form == "plain" else _as_uri(local)
+    crash, read, new = _KILL_SITES[site](spark, path)
+    old = read()
+    assert old != new
+
+    fn, at_boundary = _KILL_POINTS[boundary]
+    real = getattr(fsutil, fn)
+
+    def dying(spark_, *paths):
+        if at_boundary(*paths):
+            raise _Killed(boundary)
+        return real(spark_, *paths)
+
+    monkeypatch.setattr(fsutil, fn, dying)
+    with pytest.raises(_Killed):
+        crash()
+    monkeypatch.undo()
+
+    assert read() == (new if boundary == "before_drop" else old)
+    assert fsutil.is_dir(spark, path)
+    assert not fsutil.exists(spark, path + "__old")
+    assert fsutil.exists(spark, path + "__staging") == (boundary != "before_drop")
 
 
 def test_facade_guards(spark, tmp_path):
+    """Remote URIs are accepted (the storage layer resolves the
+    filesystem from the path — nothing is touched at construction), the
+    dimension guard still refuses, and a pre-created bare directory
+    still gets the schema'd empty snapshot."""
     import pytest as _pytest
 
     from wpvectordb_spark.table import VectorTable, VectorTableQueue
 
-    with _pytest.raises(ValueError, match="LOCAL"):
-        VectorTable(spark, "s3a://bucket/vectors")
-    with _pytest.raises(ValueError, match="LOCAL"):
-        VectorTableQueue(spark, "hdfs://nn/queue")
+    assert VectorTable(spark, "s3a://bucket/vectors").path == "s3a://bucket/vectors"
+    assert VectorTableQueue(spark, "hdfs://nn/queue").path == "hdfs://nn/queue"
     vt = VectorTable(spark, str(tmp_path / "v"), vector_length=4)
     vt.init()
     with _pytest.raises(ValueError):
@@ -144,68 +256,64 @@ def test_facade_guards(spark, tmp_path):
 
 
 def test_file_uri_normalized_to_local_path(spark, tmp_path):
-    """file:// URIs are stripped to plain local paths: os.path-based
-    existence checks must see the same table Spark writes — the raw URI
-    made table_exists() False and init() overwrote the data."""
-    import pytest as _pytest
-
+    """Every spelling of a local table — plain path, ``file:/x``,
+    ``file:///x`` — addresses the SAME snapshot: a table written through
+    one is seen through the others, and init() through any of them is a
+    no-op, never an overwrite."""
     plain = str(tmp_path / "vectors")
     vt_uri = VectorTable(spark, f"file://{plain}", vector_length=4)
-    assert vt_uri.path == plain
     vt_uri.init()
     vt_uri.insert_all(1, [[1.0, 0.0, 0.0, 0.0]])
     assert vt_uri.table_exists()
-    # a second handle via the URI must NOT see the table as absent
-    vt2 = VectorTable(spark, f"file://{plain}", vector_length=4)
-    assert vt2.table_exists()
-    vt2.init()  # must be a no-op, not an overwrite
-    assert vt2.get_vector_count() == 1
-    # non-local authority is remote storage in disguise
-    with _pytest.raises(ValueError, match="authority"):
-        VectorTable(spark, "file://other-host/data/v")
-    # Hadoop/Spark canonicalize local paths to the SINGLE-slash URI form
-    # (file:/x) — it must normalize like file:///x, and single-slash
-    # remote schemes must still be refused (not treated as relative paths)
-    assert VectorTable(spark, f"file:{plain}", vector_length=4).path == plain
-    with _pytest.raises(ValueError, match="LOCAL"):
-        VectorTable(spark, "hdfs:/data/v")
-    with _pytest.raises(ValueError, match="LOCAL"):
-        VectorTableQueue(spark, "s3a:/bucket/q")
-    # a Windows drive path is a LOCAL path, not a scheme-'C' URI (no
-    # registered URI scheme is one letter); slashless file: is neither a
-    # canonical URI nor a plain path — refused, not a literal filename
-    from wpvectordb_spark.table import _check_local_path
+    for spelling in (plain, _as_uri(plain), f"file://{plain}"):
+        vt2 = VectorTable(spark, spelling, vector_length=4)
+        assert vt2.table_exists()
+        vt2.init()  # must be a no-op, not an overwrite
+        assert vt2.get_vector_count() == 1
+    # the queue's init is the same no-op over an existing snapshot
+    q = VectorTableQueue(spark, _as_uri(str(tmp_path / "queue")))
+    q.init()
+    q.add_post(7)
+    VectorTableQueue(spark, str(tmp_path / "queue")).init()
+    assert q.get_total_records() == 1
 
-    assert _check_local_path("C:/data/vectors") == "C:/data/vectors"
-    with _pytest.raises(ValueError, match="malformed"):
-        _check_local_path("file:relative/path")
+
+def _check_old_copy_recovered(spark, path: str, local: str) -> None:
+    """``path`` addresses the local directory ``local``; the crash is
+    simulated on the local directory."""
+    import os
+
+    vt = VectorTable(spark, path, vector_length=4)
+    vt.init()
+    vt.insert_all(7, [[1.0, 0.0, 0.0, 0.0]])
+    # simulate the crash window: snapshot renamed aside, new never landed
+    os.rename(local, local + "__old")
+    assert vt.table_exists()  # recovery happened
+    assert not os.path.exists(local + "__old")
+    assert vt.get_vector_count() == 1
+    vt.init()  # still a no-op after recovery
+    assert vt.get_vector_count() == 1
+    # same for the queue facade
+    qlocal = local + "_queue"
+    q = VectorTableQueue(spark, path + "_queue")
+    q.init()
+    q.add_post(42)
+    os.rename(qlocal, qlocal + "__old")
+    assert q.get_total_records() == 1
+    # and a write-first sequence (no read between crash and write)
+    os.rename(qlocal, qlocal + "__old")
+    q.add_post(43)
+    assert q.get_total_records() == 2
 
 
 def test_snapshot_old_copy_recovered_after_crash(spark, tmp_path):
     """A kill between 'rename old aside' and 'rename staging in' leaves
     only path__old: every facade entry point must rename it back instead
     of recreating the table empty (and then gc'ing the only copy)."""
-    import os
+    local = str(tmp_path / "vectors")
+    _check_old_copy_recovered(spark, local, local)
 
-    path = str(tmp_path / "vectors")
-    vt = VectorTable(spark, path, vector_length=4)
-    vt.init()
-    vt.insert_all(7, [[1.0, 0.0, 0.0, 0.0]])
-    # simulate the crash window: snapshot renamed aside, new never landed
-    os.rename(path, path + "__old")
-    assert vt.table_exists()  # recovery happened
-    assert not os.path.exists(path + "__old")
-    assert vt.get_vector_count() == 1
-    vt.init()  # still a no-op after recovery
-    assert vt.get_vector_count() == 1
-    # same for the queue facade
-    qpath = str(tmp_path / "queue")
-    q = VectorTableQueue(spark, qpath)
-    q.init()
-    q.add_post(42)
-    os.rename(qpath, qpath + "__old")
-    assert q.get_total_records() == 1
-    # and a write-first sequence (no read between crash and write)
-    os.rename(qpath, qpath + "__old")
-    q.add_post(43)
-    assert q.get_total_records() == 2
+
+def test_snapshot_old_copy_recovered_after_crash_file_uri(spark, tmp_path):
+    local = str(tmp_path / "vectors")
+    _check_old_copy_recovered(spark, _as_uri(local), local)

@@ -925,7 +925,7 @@ def test_retrain_ivf_index_closes_the_loop(spark, tmp_path_factory):
     assert out["mean_recall"] == 0.0  # probe 0 holds none of the drifts
     assert out["retrain"] is True and out["rebuilt"] is True
     assert out["recall_after"] == 1.0  # drift region owns a centroid now
-    assert not os.path.isdir(path + "__retrain")
+    assert not os.path.isdir(path + "__staging")
     assert not os.path.isdir(path + "__old")
     # the rebuilt index serves the drift region through its own cluster
     got = SIM.ivf_topk_from_index(spark, path, vec(0.05, 0, 1, 0), k=5, n_probe=1)
@@ -1011,7 +1011,7 @@ def test_fsutil_hadoop_fs_semantics(spark, tmp_path):
     calls it replaced: recursive delete, missing-path delete no-op,
     rename, and a LOUD refusal of an existing rename destination (the
     Hadoop move-INTO-directory fallback would nest the new snapshot
-    inside the old one)."""
+    inside the old one); listings and text sidecars likewise."""
     from wpvectordb_spark import fsutil
 
     for prefix in ("", "file:"):
@@ -1034,6 +1034,22 @@ def test_fsutil_hadoop_fs_semantics(spark, tmp_path):
         fsutil.delete(spark, c)  # recursive
         assert not fsutil.exists(spark, c)
         fsutil.delete(spark, c)  # missing-path no-op
+        # listings: missing path is empty; names skip markers/hidden files
+        assert fsutil.list_dir(spark, c) == [] and fsutil.list_files(spark, c) == []
+        (root / "b" / "part-0.txt").write_text("xyz")
+        (root / "b" / "_SUCCESS").write_text("")
+        assert fsutil.list_dir(spark, prefix + str(root)) == [("b", True)]
+        assert fsutil.list_files(spark, b, ".txt") == [
+            (f"file:{root}/b/part-0.txt", 3)
+        ]
+        # sidecars: atomic replace of an existing file, written on the
+        # raw FS (no .crc companion, no tmp left behind)
+        side = prefix + str(root / "m" / "_params.json")
+        assert fsutil.read_text(spark, side) is None
+        fsutil.write_text(spark, side, "old")
+        fsutil.write_text(spark, side, "n\u00e9w")
+        assert fsutil.read_text(spark, side) == "n\u00e9w"
+        assert os.listdir(root / "m") == ["_params.json"]
 
 
 def test_retrain_heals_swap_debris(spark, tmp_path_factory):
@@ -1101,4 +1117,4 @@ def test_retrain_over_file_uri(spark, tmp_path_factory):
     assert out["recall_after"] == 1.0
     assert os.path.isdir(local)
     assert not os.path.exists(local + "__old")
-    assert not os.path.exists(local + "__retrain")
+    assert not os.path.exists(local + "__staging")

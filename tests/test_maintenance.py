@@ -34,7 +34,7 @@ def _write_fragmented(spark, path: str, n_files: int = 32):
 def test_compact_preserves_rows_and_bin_packs(spark, tmp_path):
     path = str(tmp_path / "t")
     _write_fragmented(spark, path, 32)
-    before = M.table_file_stats(path)
+    before = M.table_file_stats(spark, path)
     assert before["n_files"] >= 32
 
     report = M.compact_table(spark, path, target_file_bytes=1 << 40)
@@ -55,7 +55,7 @@ def test_compact_preserves_rows_and_bin_packs(spark, tmp_path):
 def test_compact_targets_file_count(spark, tmp_path):
     path = str(tmp_path / "t")
     _write_fragmented(spark, path, 32)
-    total = M.table_file_stats(path)["total_bytes"]
+    total = M.table_file_stats(spark, path)["total_bytes"]
     report = M.compact_table(spark, path, target_file_bytes=max(1, total // 8))
     # range partitioner lands on the requested count (+/- sampling slack)
     assert 6 <= report["after"]["n_files"] <= 10
@@ -84,7 +84,7 @@ def test_sorted_compaction_enables_point_pruning(spark, tmp_path):
     unsorted = M.data_skipping_stats(path, "user_id")
     assert M.scan_fraction(unsorted, probe) >= 0.9  # every file overlaps
 
-    total = M.table_file_stats(path)["total_bytes"]
+    total = M.table_file_stats(spark, path)["total_bytes"]
     M.compact_table(
         spark, path, target_file_bytes=max(1, total // 8), sort_by=["user_id"]
     )
@@ -114,7 +114,7 @@ def test_zorder_compaction_prunes_on_both_columns(spark, tmp_path):
     for col, probe in (("user_id", probe_u), ("value", probe_v)):
         assert M.scan_fraction(M.data_skipping_stats(path, col), probe) >= 0.9
 
-    total = M.table_file_stats(path)["total_bytes"]
+    total = M.table_file_stats(spark, path)["total_bytes"]
     report = M.compact_table(
         spark,
         path,
@@ -146,7 +146,7 @@ def test_plain_sort_does_not_prune_trailing_column(spark, tmp_path):
     both."""
     path = str(tmp_path / "t")
     _write_fragmented(spark, path, 16)
-    total = M.table_file_stats(path)["total_bytes"]
+    total = M.table_file_stats(spark, path)["total_bytes"]
     M.compact_table(
         spark,
         path,
@@ -218,7 +218,7 @@ def test_compact_refuses_partitioned_layout(spark, tmp_path):
     _events(spark).withColumn("b", F.col("user_id") % 4).write.partitionBy(
         "b"
     ).parquet(path)
-    assert M.partition_columns(path) == ["b"]
+    assert M.partition_columns(spark, path) == ["b"]
     with pytest.raises(ValueError, match="compact_partitioned_table"):
         M.compact_table(spark, path)
 
@@ -274,7 +274,7 @@ def test_optimize_index_defragments_without_changing_results(
     SIM.append_to_ivf_index(spark, emb.where(F.col("vec_id") % 3 == 2), path)
 
     vec_dir = os.path.join(path, "vectors")
-    frag = M.table_file_stats(vec_dir)["n_files"]
+    frag = M.table_file_stats(spark, vec_dir)["n_files"]
     n_dirs = len([d for d in os.listdir(vec_dir) if d.startswith("cluster_id=")])
     assert frag > n_dirs  # appends left >1 file in at least one dir
 
@@ -282,7 +282,7 @@ def test_optimize_index_defragments_without_changing_results(
     before = [tuple(r) for r in SIM.ivf_topk_from_index(spark, path, qv, k=10, n_probe=4).collect()]
 
     report = SIM.optimize_index(spark, path)
-    assert M.table_file_stats(vec_dir)["n_files"] <= n_dirs
+    assert M.table_file_stats(spark, vec_dir)["n_files"] <= n_dirs
 
     res = SIM.ivf_topk_from_index(spark, path, qv, k=10, n_probe=4)
     assert [tuple(r) for r in res.collect()] == before
@@ -335,18 +335,18 @@ def test_compaction_crash_window_recovers(spark, tmp_path):
     os.rename(path, path + "__old")
     os.makedirs(path + "__staging")  # staging left by the dying swap
 
-    assert M.vacuum(path) == []  # both survive: live dir missing
+    assert M.vacuum(spark, path) == []  # both survive: live dir missing
     assert os.path.isdir(path + "__old")
     assert os.path.isdir(path + "__staging")
 
-    assert M.recover_table(path) is True
-    assert M.recover_table(path) is False  # idempotent
+    assert M.recover_table(spark, path) is True
+    assert M.recover_table(spark, path) is False  # idempotent
     # live copy restored -> the stale staging is now removable debris
-    assert M.vacuum(path) == [path + "__staging"]
+    assert M.vacuum(spark, path) == [path + "__staging"]
     report = M.compact_table(spark, path, target_file_bytes=1 << 40)
     assert report["after"]["n_files"] == 1
     assert spark.read.parquet(path).count() == n
-    assert M.vacuum(path) == []  # nothing left to clean
+    assert M.vacuum(spark, path) == []  # nothing left to clean
 
 
 def test_queue_facade_compact(spark, tmp_path):

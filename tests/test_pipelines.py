@@ -212,10 +212,15 @@ def test_curate_training_corpus_manifest_mode(spark, tmp_path):
         )
 
 
-def test_curate_training_corpus_manifest_resume_mid_run(spark, tmp_path):
-    """A run killed mid-pipeline resumes at the first incomplete stage:
-    deleting a later stage's manifest (and the _SUCCESS of a partial one)
-    recomputes exactly the missing suffix from the surviving prefix."""
+def _as_uri(path: str) -> str:
+    """The single-slash ``file:`` URI Hadoop and Spark print for a local
+    path — manifests must behave identically under both spellings."""
+    return "file:" + path
+
+
+def _check_manifest_resume_mid_run(spark, tmp_path, to_path) -> None:
+    """``to_path`` turns a local directory into the manifest_dir
+    spelling under test; the crash is simulated on the local dir."""
     import os
     import shutil
 
@@ -232,7 +237,9 @@ def test_curate_training_corpus_manifest_resume_mid_run(spark, tmp_path):
     mdir = str(tmp_path / "manifests")
     out1 = {
         tuple(r)
-        for r in curate_training_corpus(docs, manifest_dir=mdir, **kwargs).collect()
+        for r in curate_training_corpus(
+            docs, manifest_dir=to_path(mdir), **kwargs
+        ).collect()
     }
     # simulate the crash: stage 4 never committed (partial, no _SUCCESS)
     shutil.rmtree(os.path.join(mdir, "stage04_decontaminate"))
@@ -241,7 +248,9 @@ def test_curate_training_corpus_manifest_resume_mid_run(spark, tmp_path):
     )
     out2 = {
         tuple(r)
-        for r in curate_training_corpus(docs, manifest_dir=mdir, **kwargs).collect()
+        for r in curate_training_corpus(
+            docs, manifest_dir=to_path(mdir), **kwargs
+        ).collect()
     }
     assert out2 == out1
     assert os.path.exists(os.path.join(mdir, "stage04_decontaminate", "_SUCCESS"))
@@ -249,6 +258,17 @@ def test_curate_training_corpus_manifest_resume_mid_run(spark, tmp_path):
     assert os.path.getmtime(
         os.path.join(mdir, "stage02_near_dedup", "_SUCCESS")
     ) == mtime_before
+
+
+def test_curate_training_corpus_manifest_resume_mid_run(spark, tmp_path):
+    """A run killed mid-pipeline resumes at the first incomplete stage:
+    deleting a later stage's manifest (and the _SUCCESS of a partial one)
+    recomputes exactly the missing suffix from the surviving prefix."""
+    _check_manifest_resume_mid_run(spark, tmp_path, str)
+
+
+def test_curate_training_corpus_manifest_resume_mid_run_file_uri(spark, tmp_path):
+    _check_manifest_resume_mid_run(spark, tmp_path, _as_uri)
 
 
 def test_curate_training_corpus_soft_dedup(spark):
@@ -378,11 +398,7 @@ def test_curate_training_corpus_soft_dedup_manifest_mode(spark, tmp_path):
         )
 
 
-def test_manifest_params_accept_pre_soft_dedup_dirs(spark, tmp_path):
-    """A manifest dir written BEFORE the soft_dedup parameter existed
-    (its _params.json lacks the key) must still resume under the same
-    configuration — parameter-surface upgrades must not force full
-    recomputes (code-review round 10)."""
+def _check_params_accept_pre_soft_dedup_dirs(spark, tmp_path, to_path) -> None:
     import json
     import os
 
@@ -396,9 +412,12 @@ def test_manifest_params_accept_pre_soft_dedup_dirs(spark, tmp_path):
     mdir = str(tmp_path / "legacy")
     out1 = {
         tuple(r)
-        for r in curate_training_corpus(docs, manifest_dir=mdir, **kwargs).collect()
+        for r in curate_training_corpus(
+            docs, manifest_dir=to_path(mdir), **kwargs
+        ).collect()
     }
-    # simulate the pre-upgrade sidecar: drop the soft_dedup key
+    # simulate the pre-upgrade sidecar, rewritten by hand: drop the
+    # soft_dedup key
     pfile = os.path.join(mdir, "_params.json")
     params = json.loads(open(pfile).read())
     assert params.pop("soft_dedup") is False
@@ -406,7 +425,9 @@ def test_manifest_params_accept_pre_soft_dedup_dirs(spark, tmp_path):
         fh.write(json.dumps(params, sort_keys=True))
     out2 = {
         tuple(r)
-        for r in curate_training_corpus(docs, manifest_dir=mdir, **kwargs).collect()
+        for r in curate_training_corpus(
+            docs, manifest_dir=to_path(mdir), **kwargs
+        ).collect()
     }
     assert out2 == out1  # adopted, not refused
     # but a soft_dedup=True rerun over the legacy dir still refuses
@@ -414,14 +435,26 @@ def test_manifest_params_accept_pre_soft_dedup_dirs(spark, tmp_path):
 
     with _pytest.raises(ValueError, match="different"):
         curate_training_corpus(
-            docs, manifest_dir=mdir, soft_dedup=True, **kwargs
+            docs, manifest_dir=to_path(mdir), soft_dedup=True, **kwargs
         )
 
 
-def test_manifest_params_corrupted_file_refuses_loudly(tmp_path):
+def test_manifest_params_accept_pre_soft_dedup_dirs(spark, tmp_path):
+    """A manifest dir written BEFORE the soft_dedup parameter existed
+    (its _params.json lacks the key) must still resume under the same
+    configuration — parameter-surface upgrades must not force full
+    recomputes (code-review round 10)."""
+    _check_params_accept_pre_soft_dedup_dirs(spark, tmp_path, str)
+
+
+def test_manifest_params_accept_pre_soft_dedup_dirs_file_uri(spark, tmp_path):
+    _check_params_accept_pre_soft_dedup_dirs(spark, tmp_path, _as_uri)
+
+
+def test_manifest_params_corrupted_file_refuses_loudly(spark, tmp_path):
     """A truncated/corrupted _params.json must raise the explanatory
     ValueError (with the raw contents in the message), not a bare
-    JSONDecodeError (ADVICE round 10)."""
+    JSONDecodeError (ADVICE round 10) — under either path spelling."""
     import os
 
     import pytest as _pytest
@@ -432,5 +465,6 @@ def test_manifest_params_corrupted_file_refuses_loudly(tmp_path):
     os.makedirs(mdir)
     with open(os.path.join(mdir, "_params.json"), "w") as fh:
         fh.write('{"quality_quantile": 0.2')  # truncated write
-    with _pytest.raises(ValueError, match="unreadable"):
-        _guard_manifest_params(mdir, {"quality_quantile": 0.25})
+    for spelling in (mdir, _as_uri(mdir)):
+        with _pytest.raises(ValueError, match="unreadable"):
+            _guard_manifest_params(spark, spelling, {"quality_quantile": 0.25})

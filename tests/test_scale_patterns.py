@@ -519,6 +519,66 @@ def test_operators_keep_one_barrier_and_one_sketch_engine():
     assert not offenders, offenders
 
 
+def test_filesystem_calls_go_through_fsutil():
+    """Static guard over wpvectordb_spark/ (no Spark session): fsutil.py
+    is the package's one storage layer, so no other module may touch
+    the filesystem with ``os``/``shutil``/builtin ``open`` — those calls
+    see a Hadoop URI as a relative local path and resolve nothing
+    through the session's Hadoop conf.  Path-string helpers
+    (``os.path.join``), ``os.environ`` and ``tempfile`` defaults for
+    throwaway directories are not filesystem surgery and stay
+    allowed."""
+    import ast
+    import glob
+    import os
+
+    banned = {
+        "os." + n
+        for n in (
+            "rename", "renames", "replace", "listdir", "scandir", "walk",
+            "makedirs", "mkdir", "remove", "unlink", "rmdir", "removedirs",
+        )
+    } | {"os.path." + n for n in ("exists", "isdir", "isfile", "getsize", "getmtime")}
+
+    def dotted(node):
+        parts = []
+        while isinstance(node, ast.Attribute):
+            parts.append(node.attr)
+            node = node.value
+        if isinstance(node, ast.Name):
+            return ".".join([node.id] + parts[::-1])
+        return None
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = sorted(
+        glob.glob(os.path.join(root, "wpvectordb_spark", "**", "*.py"), recursive=True)
+    )
+    assert paths
+    offenders = []
+    for path in paths:
+        rel = os.path.relpath(path, root)
+        if rel == os.path.join("wpvectordb_spark", "fsutil.py"):
+            continue
+        with open(path) as fh:
+            tree = ast.parse(fh.read())
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                mods = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom):
+                mods = [node.module or ""]
+                if node.module in ("os", "os.path"):
+                    mods += [f"{node.module}.{a.name}" for a in node.names]
+            elif isinstance(node, ast.Call):
+                name = dotted(node.func)
+                mods = [name] if name else []
+            else:
+                continue
+            for m in mods:
+                if m in banned or m.split(".")[0] == "shutil" or m == "open":
+                    offenders.append(f"{rel}:{node.lineno} {m}")
+    assert not offenders, offenders
+
+
 def test_global_windows_carry_bounded_annotation():
     """Every Window.orderBy WITHOUT a partitionBy is a single-partition
     sort — a scale-killer unless its input is provably bounded.  The

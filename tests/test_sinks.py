@@ -51,7 +51,7 @@ def test_write_corpus_partitioned_sorted_shards(spark, tmp_path):
     langs = {d.split("=", 1)[1] for d in os.listdir(path) if d.startswith("lang=")}
     want = {r["lang"] for r in docs.select("lang").distinct().collect()}
     assert langs == want
-    assert M.partition_columns(path) == ["lang"]
+    assert M.partition_columns(spark, path) == ["lang"]
     # each lang dir's files carry near-disjoint doc_id ranges (pick the
     # dir with the MOST files so the assertion can never go vacuous —
     # the range split guarantees multi-file dirs exist at 4 ranges)

@@ -35,6 +35,86 @@ def test_stream_tumbling_equals_batch(spark):
     assert g == b and len(g) > 0
 
 
+def _small_count_stream(spark, src: str):
+    """A stateful streaming count over a small static parquet source."""
+    spark.range(200).select((F.col("id") % 7).alias("k")).repartition(2).write.mode(
+        "overwrite"
+    ).parquet(src)
+    return spark.readStream.schema("k long").parquet(src).groupBy("k").count()
+
+
+def test_run_stream_to_completion_leaves_no_sink_view(spark, tmp_path):
+    """Each call's memory sink registers a sink_* view holding its rows
+    in driver memory: the result must be materialized and the view
+    dropped, so no sink_* table survives the calls."""
+    stream = _small_count_stream(spark, str(tmp_path / "src"))
+    results = [
+        ST.run_stream_to_completion(spark, stream, output_mode="complete")
+        for _ in range(3)
+    ]
+    left = [
+        r["tableName"] for r in spark.sql("SHOW TABLES").collect()
+        if r["tableName"].startswith("sink_")
+    ]
+    assert left == []
+    want = [(k, len(range(k, 200, 7))) for k in range(7)]
+    for res in results:  # still readable after the view is gone
+        assert sorted(map(tuple, res.collect())) == want
+
+
+def test_run_stream_to_completion_conf_is_race_free(spark, tmp_path, monkeypatch):
+    """Two threads with different state_partitions: each query must START
+    under its own partition count, the session value must end where it
+    began, and each result must equal its single-threaded rows.  start()
+    is slowed so the second call begins while the first is starting —
+    the interleaving in which unsynchronized set/restore pairs swap
+    values."""
+    import threading
+    import time
+
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    stream = _small_count_stream(spark, str(tmp_path / "src"))
+    key = "spark.sql.shuffle.partitions"
+    original = spark.conf.get(key)
+    single = {
+        parts: sorted(map(tuple, ST.run_stream_to_completion(
+            spark, stream, output_mode="complete", state_partitions=parts
+        ).collect()))
+        for parts in (3, 5)
+    }
+    real_start = DataStreamWriter.start
+    started_with = {}
+
+    def slow_start(self, *a, **kw):
+        time.sleep(1.0)
+        started_with[threading.current_thread().name] = spark.conf.get(key)
+        return real_start(self, *a, **kw)
+
+    monkeypatch.setattr(DataStreamWriter, "start", slow_start)
+    got, errors = {}, []
+
+    def call(parts):
+        try:
+            got[parts] = sorted(map(tuple, ST.run_stream_to_completion(
+                spark, stream, output_mode="complete", state_partitions=parts
+            ).collect()))
+        except Exception as e:  # surfaced by the assert below
+            errors.append(e)
+
+    threads = [threading.Thread(target=call, args=(p,), name=f"p{p}") for p in (3, 5)]
+    threads[0].start()
+    time.sleep(0.3)
+    threads[1].start()
+    for t in threads:
+        t.join(timeout=300)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert started_with == {"p3": "3", "p5": "5"}
+    assert spark.conf.get(key) == original
+    assert got == single
+
+
 def test_stream_queue_ingest(spark):
     empty = spark.createDataFrame([], QUEUE_SCHEMA)
     ids = ST.stream_events(spark, SF_DIR).select(
@@ -436,11 +516,13 @@ def test_stream_dedup_ingest_compaction_bounds_state_dirs(spark, tmp_path):
     assert get_index().count() == corpus.count()
 
 
-def test_stream_dedup_ingest_resumes_from_state_path(spark, tmp_path):
-    """The persisted-index reuse story: a SECOND start() over the same
-    source + state_path + checkpoint_path picks up where the first
-    stopped — new files dedup against the first run's corpus, old docs
-    are never re-indexed, and batch ids continue (no b0 collision)."""
+def _as_uri(path: str) -> str:
+    """The single-slash ``file:`` URI Hadoop and Spark print for a local
+    path — stream state must behave identically under both spellings."""
+    return "file:" + path
+
+
+def _check_dedup_ingest_resume(spark, tmp_path, to_path) -> None:
     from wpvectordb_spark.operators import dedup as D
 
     docs = (
@@ -455,8 +537,8 @@ def test_stream_dedup_ingest_resumes_from_state_path(spark, tmp_path):
         )  # near-dups of run-1 docs: cross-RUN pairs prove the resume
     )
     src = str(tmp_path / "src")
-    state = str(tmp_path / "state")
-    ckpt = str(tmp_path / "ckpt")
+    state = to_path(str(tmp_path / "state"))
+    ckpt = to_path(str(tmp_path / "ckpt"))
     first.repartition(2).write.mode("append").parquet(src)
 
     def run_once():
@@ -486,6 +568,18 @@ def test_stream_dedup_ingest_resumes_from_state_path(spark, tmp_path):
     cross_run = {(a, b) for a, b, _ in streamed if a < 40 and b >= 10000}
     assert len(cross_run) >= 15  # run-2 copies matched against run-1 index
     assert get_index().count() == full.count()  # each doc indexed exactly once
+
+
+def test_stream_dedup_ingest_resumes_from_state_path(spark, tmp_path):
+    """The persisted-index reuse story: a SECOND start() over the same
+    source + state_path + checkpoint_path picks up where the first
+    stopped — new files dedup against the first run's corpus, old docs
+    are never re-indexed, and batch ids continue (no b0 collision)."""
+    _check_dedup_ingest_resume(spark, tmp_path, str)
+
+
+def test_stream_dedup_ingest_resumes_from_file_uri_state_path(spark, tmp_path):
+    _check_dedup_ingest_resume(spark, tmp_path, _as_uri)
 
 
 def test_read_state_stable_retries_once(spark, tmp_path, monkeypatch):
@@ -550,15 +644,12 @@ def test_read_state_stable_gives_up_after_bounded_retries(spark, tmp_path, monke
     assert calls["n"] == 3
 
 
-def test_stream_queue_ingest_resumes_from_state_path(spark, tmp_path):
-    """stream_queue_ingest adopts an existing versioned state dir: the
-    second run appends to the first run's queue, not a fresh copy of
-    initial_queue."""
+def _check_queue_ingest_resume(spark, tmp_path, to_path) -> None:
     now = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
     empty = spark.createDataFrame([], QUEUE_SCHEMA)
     src = str(tmp_path / "src")
-    state = str(tmp_path / "state")
-    ckpt = str(tmp_path / "ckpt")
+    state = to_path(str(tmp_path / "state"))
+    ckpt = to_path(str(tmp_path / "ckpt"))
 
     def run_once(lo, hi):
         spark.range(lo, hi).select(
@@ -579,6 +670,17 @@ def test_stream_queue_ingest_resumes_from_state_path(spark, tmp_path):
     queue = get_state()
     assert queue.count() == 25  # 10 from run 1 + 15 from run 2, no resets
     assert queue.where(F.col("status") == "pending").count() == 25
+
+
+def test_stream_queue_ingest_resumes_from_state_path(spark, tmp_path):
+    """stream_queue_ingest adopts an existing versioned state dir: the
+    second run appends to the first run's queue, not a fresh copy of
+    initial_queue."""
+    _check_queue_ingest_resume(spark, tmp_path, str)
+
+
+def test_stream_queue_ingest_resumes_from_file_uri_state_path(spark, tmp_path):
+    _check_queue_ingest_resume(spark, tmp_path, _as_uri)
 
 
 def test_state_listing_ignores_uncommitted_dirs(spark, tmp_path):
@@ -710,19 +812,19 @@ def test_queue_ingest_apply_crash_replay_is_idempotent(spark, tmp_path):
     )
     ST._queue_ingest_apply(spark, root, jobs(0, 10), 0, now)
     before = sorted(map(tuple, spark.read.parquet(
-        f"{root}/v{ST._queue_state_versions(root)[-1]}").collect()))
+        f"{root}/v{ST._queue_state_versions(spark, root)[-1]}").collect()))
     assert len(before) == 10
     # crash-recovery replay of batch 0 (marker == bid): allowed, no-op
     ST._queue_ingest_apply(spark, root, jobs(0, 10), 0, now)
     after = sorted(map(tuple, spark.read.parquet(
-        f"{root}/v{ST._queue_state_versions(root)[-1]}").collect()))
+        f"{root}/v{ST._queue_state_versions(spark, root)[-1]}").collect()))
     assert after == before
     # the stream continues
     ST._queue_ingest_apply(spark, root, jobs(10, 15), 1, now)
     assert spark.read.parquet(
-        f"{root}/v{ST._queue_state_versions(root)[-1]}").count() == 15
+        f"{root}/v{ST._queue_state_versions(spark, root)[-1]}").count() == 15
     # retention: at most the current + one superseded version on disk
-    assert len(ST._queue_state_versions(root)) <= 2
+    assert len(ST._queue_state_versions(spark, root)) <= 2
 
 
 def test_stream_ann_serve_matches_batch_serve(spark, tmp_path):
@@ -819,7 +921,7 @@ def test_stream_ann_serve_replay_compaction_and_refusals(spark, tmp_path):
     assert len(once) == 12 * 5
     # compaction folded old deltas: listing stays bounded (snapshot + the
     # batches newer than its coverage), never 4 loose delta dirs
-    upto, spath, deltas = ST._list_state(res_dir)
+    upto, spath, deltas = ST._list_state(spark, res_dir)
     assert spath is not None and len(deltas) < 4
     # replay the LATEST batch (the only legitimate replay) -> identical
     ST._ann_serve_apply(

@@ -47,42 +47,27 @@ honest check that clustering bought pruning, not just an ordered write.
 from __future__ import annotations
 
 import math
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from wpvectordb_spark import fsutil
+
 DEFAULT_TARGET_FILE_BYTES = 128 << 20  # the HDFS-block-sized lakehouse default
 
 
-def _parquet_files(path: str, suffix: str = ".parquet") -> list[str]:
-    """All data files under ``path`` (recursive: partitioned tables nest
-    ``key=value`` dirs), excluding markers and hidden/staging debris.
-    ``suffix`` generalizes the listing to other Spark output formats
-    (the training-shard sink's .orc/.json/.csv reports share this one
-    debris rule instead of growing a second walk)."""
-    out: list[str] = []
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            if f.endswith(suffix) and not f.startswith(("_", ".")):
-                out.append(os.path.join(root, f))
-    return sorted(out)
-
-
-def partition_columns(path: str) -> list[str]:
+def partition_columns(spark: SparkSession, path: str) -> list[str]:
     """Hive-style partition columns detected from the directory layout
     (``key=value`` subdirs, outermost first).  Empty list for a flat
     table.  Mixed layouts (two different keys at one level) refuse —
     that is not a layout Spark wrote."""
     cols: list[str] = []
     cur = path
-    while os.path.isdir(cur):
+    while True:
         subs = [
             d
-            for d in os.listdir(cur)
-            if "=" in d
-            and not d.startswith(("_", "."))
-            and os.path.isdir(os.path.join(cur, d))
+            for d, is_dir in fsutil.list_dir(spark, cur)
+            if is_dir and "=" in d and not d.startswith(("_", "."))
         ]
         if not subs:
             return cols
@@ -93,16 +78,17 @@ def partition_columns(path: str) -> list[str]:
                 f"under {cur!r}"
             )
         cols.append(names.pop())
-        cur = os.path.join(cur, sorted(subs)[0])
-    return cols
+        cur = f"{cur}/{subs[0]}"
 
 
-def table_file_stats(path: str, suffix: str = ".parquet") -> dict:
-    """File-level shape of a parquet table: the numbers OPTIMIZE decisions
-    are made from.  Driver-side listing — at production scale the same
-    figures come from the table format's manifest (Delta/Iceberg) or a
-    parallel FileSystem listing; a maintenance job reads them once."""
-    sizes = [os.path.getsize(f) for f in _parquet_files(path, suffix)]
+def table_file_stats(spark: SparkSession, path: str, suffix: str = ".parquet") -> dict:
+    """File-level shape of a table: the numbers OPTIMIZE decisions are
+    made from.  One driver-side ``fsutil.list_files`` listing — at
+    production scale the same figures come from the table format's
+    manifest (Delta/Iceberg); a maintenance job reads them once.
+    ``suffix`` covers other Spark output formats (the training-shard
+    sink's .orc/.json/.csv reports)."""
+    sizes = [size for _, size in fsutil.list_files(spark, path, suffix)]
     return {
         "n_files": len(sizes),
         "total_bytes": sum(sizes),
@@ -262,10 +248,9 @@ def compact_table(
     # import here: table.py is facade-layer (imports operators); the
     # one-way dep operators -> table stays acyclic but keep it local so
     # module import order never matters
-    from wpvectordb_spark.table import _check_local_path, _write_snapshot
+    from wpvectordb_spark.table import _write_snapshot
 
-    path = _check_local_path(path)
-    pcols = partition_columns(path)
+    pcols = partition_columns(spark, path)
     if pcols:
         # reading a partitioned table and rewriting it flat would
         # silently DESTROY partition pruning for every reader (the IVF /
@@ -274,7 +259,7 @@ def compact_table(
             f"compact_table: {path!r} is Hive-partitioned by {pcols} — "
             "use compact_partitioned_table, which preserves the layout"
         )
-    before = table_file_stats(path)
+    before = table_file_stats(spark, path)
     if before["n_files"] == 0:
         raise ValueError(f"compact_table: no parquet files under {path!r}")
     if before["n_files"] < min_files and not (sort_by or zorder_by):
@@ -290,7 +275,7 @@ def compact_table(
     _write_snapshot(path, plan)
     return {
         "before": before,
-        "after": table_file_stats(path),
+        "after": table_file_stats(spark, path),
         "skipped": False,
         "n_output_files_target": n_out,
     }
@@ -324,16 +309,15 @@ def compact_partitioned_table(
     replaces the WHOLE table dir atomically, so readers never see a
     half-rewritten partition set.
     """
-    from wpvectordb_spark.table import _check_local_path, _write_snapshot
+    from wpvectordb_spark.table import _write_snapshot
 
-    path = _check_local_path(path)
-    pcols = partition_columns(path)
+    pcols = partition_columns(spark, path)
     if not pcols:
         raise ValueError(
             f"compact_partitioned_table: {path!r} has no key=value "
             "partition dirs — use compact_table"
         )
-    before = table_file_stats(path)
+    before = table_file_stats(spark, path)
     if before["n_files"] == 0:
         raise ValueError(
             f"compact_partitioned_table: no parquet files under {path!r}"
@@ -348,30 +332,27 @@ def compact_partitioned_table(
     _write_snapshot(path, plan, partition_by=pcols)
     return {
         "before": before,
-        "after": table_file_stats(path),
+        "after": table_file_stats(spark, path),
         "skipped": False,
         "partition_columns": pcols,
         "n_output_files_target": n_out,
     }
 
 
-def recover_table(path: str) -> bool:
+def recover_table(spark: SparkSession, path: str) -> bool:
     """Close the compaction crash window for STANDALONE tables: a kill
-    between _write_snapshot's two renames leaves ``path`` absent with the
-    data intact in ``path__old``.  The facades recover on every read
-    (``table._recover_snapshot``); a standalone compacted table (an ANN
-    index's vectors dir, a manifest) recovers on its next maintenance
-    call — or explicitly here.  Returns True if an orphan was renamed
-    back."""
-    from wpvectordb_spark.table import _check_local_path, _recover_snapshot
-
-    path = _check_local_path(path)
-    existed = os.path.exists(path)
-    _recover_snapshot(path)
-    return not existed and os.path.exists(path)
+    between the swap's two renames leaves ``path`` absent with the data
+    intact in ``path__old``.  The facades recover on every read; a
+    standalone compacted table (an ANN index's vectors dir, a manifest)
+    recovers on its next maintenance call — or explicitly here
+    (``fsutil.recover_snapshot``, which also drops a stale ``__old``
+    beside a live copy).  Returns True if an orphan was renamed back."""
+    existed = fsutil.exists(spark, path)
+    fsutil.recover_snapshot(spark, path)
+    return not existed and fsutil.exists(spark, path)
 
 
-def vacuum(path: str) -> list[str]:
+def vacuum(spark: SparkSession, path: str) -> list[str]:
     """Remove crash debris around a snapshot table: a ``__staging`` dir
     from a write that died mid-job and a ``__old`` dir from one that died
     after the swap completed are both safe to drop once the live copy
@@ -383,34 +364,32 @@ def vacuum(path: str) -> list[str]:
     simply re-run after recovery), and a cleanup that mutates a crashed
     table's directory set before recovery has adjudicated it invites
     operator error.  Returns the paths removed."""
-    import shutil
-
-    from wpvectordb_spark.table import _check_local_path
-
-    path = _check_local_path(path)
+    if not fsutil.is_dir(spark, path):
+        return []
     removed = []
-    staging = path + "__staging"
-    if os.path.isdir(staging) and os.path.isdir(path):
-        shutil.rmtree(staging)
-        removed.append(staging)
-    old = path + "__old"
-    if os.path.isdir(old) and os.path.isdir(path):
-        shutil.rmtree(old)
-        removed.append(old)
+    for debris in (path + "__staging", path + "__old"):
+        if fsutil.is_dir(spark, debris):
+            fsutil.delete(spark, debris)
+            removed.append(debris)
     return removed
 
 
 def data_skipping_stats(path: str, column: str) -> list[dict]:
     """Per-file min/max footer stats for ``column`` — the metadata a
     parquet reader prunes with.  pyarrow, driver-side, METADATA-ONLY (no
-    data pages read); production equivalents read the same numbers from
-    the table-format manifest.  Returns one dict per file with row-group
-    aggregated min/max; files without stats report None."""
-    import pyarrow.parquet as pq
+    data pages read); pyarrow's dataset discovery lists the files (local
+    path or URI, recursing into partition dirs, skipping ``_``/``.``
+    names) the way a parquet reader would.  Production equivalents read
+    the same numbers from the table-format manifest.  Returns one dict
+    per file with row-group aggregated min/max; files without stats
+    report None."""
+    import pyarrow.dataset as pads
 
     out = []
-    for f in _parquet_files(path):
-        md = pq.ParquetFile(f).metadata
+    frags = pads.dataset(path, format="parquet").get_fragments()
+    for frag in sorted(frags, key=lambda f: f.path):
+        md = frag.metadata
+        f = frag.path
         names = {md.schema.column(i).name: i for i in range(md.num_columns)}
         if column not in names:
             raise KeyError(f"{column!r} not in {f}: {sorted(names)}")

@@ -2384,8 +2384,8 @@ def retrain_ivf_index(
     delta, exactly "rebuild with the append set folded in") and swap
     the new index in crash-safely.
 
-    The swap follows the facades' staging/rename protocol (build into
-    ``path__retrain``, move the live index aside, promote, drop the old
+    The swap is the facades' ``fsutil.replace_dir`` (build into
+    ``path__staging``, move the live index aside, promote, drop the old
     copy), so a kill mid-rebuild leaves the old or the new index, never
     zero copies; the rebuild READS the old layout while WRITING the
     staging one, so there is no overwrite-while-reading window at all.
@@ -2404,11 +2404,9 @@ def retrain_ivf_index(
     """
     from wpvectordb_spark import fsutil
 
-    # rename surgery ahead, routed through the Hadoop FileSystem API so
-    # the swap works wherever the index lives (local path, file:/,
-    # hdfs://, s3a:// — resolved from the path's scheme); heal a swap
-    # orphaned between the two renames of a previous retrain, and drop
-    # a stale __old from a kill after the promote (ADVICE round 10)
+    # heal a swap orphaned between the two renames of a previous
+    # retrain, and drop a stale __old from a kill after the promote,
+    # before the sidecar check and the measurement read the index
     fsutil.recover_snapshot(spark, path)
     if _read_ivfpq_params(spark, path) is not None:
         raise ValueError(
@@ -2503,17 +2501,14 @@ def _closed_retrain_loop(
     rebuild: bool,
 ) -> dict:
     """Shared measure -> decide -> rebuild-and-swap skeleton of the two
-    retrain loops.  The swap follows the facades' staging/rename order
-    (build aside, live aside, promote, drop old): a kill anywhere
-    leaves the data in at most one rename of recovery — the one window
-    between the two renames leaves ``path`` absent with the old copy
-    intact at ``path__old``, and the callers heal that (plus a stale
-    ``__old`` from a kill after the promote) on their next invocation
-    via ``fsutil.recover_snapshot`` before measuring (same contract as
-    the facades; readers racing that window see no live dir, the
-    documented single-writer trade).  All surgery goes through the
-    Hadoop FileSystem API (``fsutil``) so the loop works unchanged when
-    the index lives on HDFS/S3 instead of the driver's local disk."""
+    retrain loops.  The rebuild goes through the facades' one swap
+    (``fsutil.replace_dir``: build into ``path__staging``, live aside,
+    promote, drop old), so a kill anywhere leaves the old or the new
+    index; the callers heal swap debris on their next invocation via
+    ``fsutil.recover_snapshot`` before measuring (readers racing the
+    window between the renames see no live dir, the documented
+    single-writer trade).  Hadoop FS throughout, so the loop works
+    unchanged when the index lives on HDFS/S3."""
     from wpvectordb_spark import fsutil
 
     measured = measure()
@@ -2530,16 +2525,7 @@ def _closed_retrain_loop(
     }
     if not (rebuild and out["retrain"]):
         return out
-    staging = path + "__retrain"
-    # debris from a kill mid-build: the live index was never touched, so
-    # a stale staging dir is disposable (delete is a no-op when absent)
-    fsutil.delete(spark, staging)
-    build_staging(staging)
-    old = path + "__old"
-    fsutil.delete(spark, old)
-    fsutil.rename(spark, path, old)
-    fsutil.rename(spark, staging, path)
-    fsutil.delete(spark, old)
+    fsutil.replace_dir(spark, path, build_staging)
     out["rebuilt"] = True
     after = retrain_decision(measure(), threshold=threshold).collect()[0]
     out["recall_after"] = after["mean_recall"]

@@ -39,15 +39,18 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from wpvectordb_spark import fsutil
 from wpvectordb_spark.operators import curation as CU
 from wpvectordb_spark.operators import dedup as D
 from wpvectordb_spark.operators import text_analysis as TA
 
 
-def _guard_manifest_params(manifest_dir: str, params: dict) -> None:
+def _guard_manifest_params(
+    spark: SparkSession, manifest_dir: str, params: dict
+) -> None:
     """Pin the stage-affecting parameters of a manifest directory: a
     rerun with different parameters would ADOPT manifests computed under
     the old configuration and silently emit a mixed-config corpus — the
@@ -56,9 +59,8 @@ def _guard_manifest_params(manifest_dir: str, params: dict) -> None:
     later runs must match it byte-for-byte (sorted-key JSON)."""
     blob = json.dumps(params, sort_keys=True)
     path = os.path.join(manifest_dir, "_params.json")
-    if os.path.exists(path):
-        with open(path) as fh:
-            existing = fh.read()
+    existing = fsutil.read_text(spark, path)
+    if existing is not None:
         # compare as dicts with defaults for keys ADDED since the dir
         # was written: a pre-soft-dedup manifest dir was implicitly
         # written under soft_dedup=False, and refusing it on a
@@ -92,10 +94,7 @@ def _guard_manifest_params(manifest_dir: str, params: dict) -> None:
                 "manifest_dir"
             )
         return
-    tmp = path + "__tmp"
-    with open(tmp, "w") as fh:
-        fh.write(blob)
-    os.replace(tmp, path)
+    fsutil.write_text(spark, path, blob)
 
 
 def curate_training_corpus(
@@ -187,10 +186,11 @@ def curate_training_corpus(
     itself is the caller's half of that contract: one manifest_dir per
     (corpus, config) run).  ``persist`` is ignored in this mode — there
     are no session caches to manage, and results are identical to both
-    in-session modes (test-asserted).  Local paths only (the completion
-    checks are driver-local ``os`` calls); at 100 TB the same layout
-    maps 1:1 onto Delta/Iceberg tables with the job-level idempotence
-    handled by the table format.
+    in-session modes (test-asserted).  ``manifest_dir`` may be a local
+    path or any Hadoop URI (completion checks and ``_params.json`` go
+    through ``fsutil``); at 100 TB the same layout maps 1:1 onto
+    Delta/Iceberg tables with the job-level idempotence handled by the
+    table format.
     """
     spark = docs.sparkSession
     if soft_dedup and "weight" in docs.columns:
@@ -201,11 +201,8 @@ def curate_training_corpus(
         )
     stage_no = [0]
     if manifest_dir is not None:
-        from wpvectordb_spark.table import _check_local_path
-
-        manifest_dir = _check_local_path(manifest_dir)
-        os.makedirs(manifest_dir, exist_ok=True)
         _guard_manifest_params(
+            spark,
             manifest_dir,
             {
                 "quality_quantile": quality_quantile,
@@ -245,7 +242,7 @@ def curate_training_corpus(
         if manifest_dir is None:
             return compute().localCheckpoint(eager=True)
         path = os.path.join(manifest_dir, f"stage{stage_no[0]:02d}_{name}")
-        if not os.path.exists(os.path.join(path, "_SUCCESS")):
+        if not fsutil.exists(spark, os.path.join(path, "_SUCCESS")):
             compute().write.mode("overwrite").parquet(path)
         return spark.read.parquet(path)
 

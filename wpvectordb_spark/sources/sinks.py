@@ -21,8 +21,6 @@ would throw an AnalysisException naming nothing useful mid-job).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -106,7 +104,7 @@ def write_corpus(
     from wpvectordb_spark.operators.maintenance import table_file_stats
 
     ext = {"parquet": ".parquet", "orc": ".orc", "json": ".json", "csv": ".csv"}[fmt]
-    stats = table_file_stats(path, suffix=ext)
+    stats = table_file_stats(df.sparkSession, path, suffix=ext)
     return {
         "path": path,
         "format": fmt,

@@ -23,11 +23,14 @@ from __future__ import annotations
 
 import os
 import tempfile
+import threading
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from wpvectordb_spark import fsutil
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events parquet (one file = one
@@ -96,6 +99,13 @@ BOUNDED_STATE_PARTITIONS = int(
 )
 
 
+#: serializes every set / start / restore of the session-wide shuffle
+#: partition conf in ``run_stream_to_completion``: two concurrent calls
+#: would otherwise each restore the OTHER's value (the session ends on
+#: the wrong count) and start with the other's state-store count
+_STREAM_CONF_LOCK = threading.Lock()
+
+
 def run_stream_to_completion(
     spark: SparkSession,
     streaming_df: DataFrame,
@@ -103,43 +113,45 @@ def run_stream_to_completion(
     state_partitions: int | None = None,
 ) -> DataFrame:
     """Run a streaming query over its (static) file source until all
-    available data is processed; return the memory-sink contents.
-    The throwaway checkpoint directory is deleted once the query stops —
-    each call would otherwise leave a dir in the temp root forever.
+    available data is processed; return the result as a batch
+    DataFrame.  Nothing the call creates outlives it: the memory-sink
+    rows are materialized (eager ``localCheckpoint``) and the sink's
+    ``sink_*`` view is dropped — each view would otherwise pin its rows
+    in driver memory for the session — and the throwaway checkpoint
+    directory is deleted (``fsutil``) once the query stops.
 
     ``state_partitions`` pins ``spark.sql.shuffle.partitions`` for the
-    query START only (restored immediately after): Structured Streaming
-    freezes the stateful-operator partition count into the checkpoint at
-    first batch, so this is the one knob that decides how many state
-    stores the query maintains forever.  Pass
+    query START only (restored immediately after, under a module-level
+    lock so concurrent calls never see or restore each other's value):
+    Structured Streaming freezes the stateful-operator partition count
+    into the checkpoint at first batch, so this is the one knob that
+    decides how many state stores the query maintains forever.  Pass
     ``BOUNDED_STATE_PARTITIONS`` for aggregations whose state
     cardinality is bounded (see its docstring); leave ``None`` (the
     session default) for key-cardinality state."""
-    import shutil
-
     name = f"sink_{uuid.uuid4().hex[:12]}"
     ckpt = os.path.join(tempfile.gettempdir(), f"ckpt_{name}")
-    old_parts = None
-    if state_partitions is not None:
+    writer = (
+        streaming_df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode)
+        .option("checkpointLocation", ckpt)
+    )
+    with _STREAM_CONF_LOCK:
         old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(int(state_partitions)))
-    try:
-        q = (
-            streaming_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-    finally:
-        if old_parts is not None:
+        if state_partitions is not None:
+            spark.conf.set("spark.sql.shuffle.partitions", str(int(state_partitions)))
+        try:
+            q = writer.start()
+        finally:
             spark.conf.set("spark.sql.shuffle.partitions", old_parts)
     try:
         q.processAllAvailable()
+        return spark.table(name).localCheckpoint(eager=True)
     finally:
         q.stop()
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(name)
+        spark.catalog.dropTempView(name)
+        fsutil.delete(spark, ckpt)
 
 
 def stream_session_counts(
@@ -245,14 +257,12 @@ def stream_queue_ingest(
     of obtaining it.
 
     ``state_path`` / ``checkpoint_path`` pin the versioned state table
-    and the streaming checkpoint to caller-supplied LOCAL directories so
-    a later ``start()`` over the same source resumes where this one
+    and the streaming checkpoint to caller-supplied directories (local
+    paths or Hadoop URIs — listing and gc go through ``fsutil``) so a
+    later ``start()`` over the same source resumes where this one
     stopped: existing ``v<N>`` dirs are adopted (``initial_queue`` is
     only written on a fresh state dir) and the checkpoint carries the
-    batch-id sequence forward.  Defaults stay throwaway temp dirs.  The
-    version repointing uses driver-local ``os`` calls, so remote URIs
-    are refused (same rule as the table facades — production state is
-    Delta/Iceberg).
+    batch-id sequence forward.  Defaults stay throwaway temp dirs.
 
     Mirroring the dedup stream's restart refusal: a ``_last_batch``
     marker records the newest applied batch id, and a micro-batch whose
@@ -265,8 +275,8 @@ def stream_queue_ingest(
     A replay of the SAME batch id (marker == id, crash-recovery) stays
     allowed.
     """
-    root = _state_root(state_path, "stream_queue_state_")
-    if not _queue_state_versions(root):
+    root = state_path or tempfile.mkdtemp(prefix="stream_queue_state_")
+    if not _queue_state_versions(spark, root):
         initial_queue.write.mode("overwrite").parquet(os.path.join(root, "v0"))
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -283,13 +293,13 @@ def stream_queue_ingest(
 
     def get_state() -> DataFrame:
         return spark.read.parquet(
-            os.path.join(root, f"v{_queue_state_versions(root)[-1]}")
+            os.path.join(root, f"v{_queue_state_versions(spark, root)[-1]}")
         )
 
     return get_state, query
 
 
-def _queue_state_versions(root: str) -> list[int]:
+def _queue_state_versions(spark: SparkSession, root: str) -> list[int]:
     """COMMITTED (_SUCCESS-marked) version numbers of a queue state dir,
     ascending.  A crashed mid-write leaves a partial v<N> dir, and
     resuming from partial state would silently drop the missing rows
@@ -297,10 +307,10 @@ def _queue_state_versions(root: str) -> list[int]:
     the next write."""
     return sorted(
         int(d[1:])
-        for d in os.listdir(root)
+        for d, _ in fsutil.list_dir(spark, root)
         if d.startswith("v")
         and d[1:].isdigit()
-        and os.path.exists(os.path.join(root, d, "_SUCCESS"))
+        and fsutil.exists(spark, os.path.join(root, d, "_SUCCESS"))
     )
 
 
@@ -316,15 +326,13 @@ def _queue_ingest_apply(
     With batches whose post/job ids are disjoint — the normal crawl
     shape — sequential application telescopes to ONE ``add_posts`` of
     the union, which is the oracle the stream arm is checked against."""
-    import shutil
-
     from wpvectordb_spark.operators import queue_ops as Q
 
     bid = int(batch_id)
     marker = os.path.join(root, "_last_batch")
-    if os.path.exists(marker):
-        with open(marker) as fh:
-            last = int(fh.read().strip() or -1)
+    text = fsutil.read_text(spark, marker)
+    if text is not None:
+        last = int(text.strip() or -1)
         if bid < last:
             raise RuntimeError(
                 f"queue state dir {root} already holds batch {last} but "
@@ -333,7 +341,7 @@ def _queue_ingest_apply(
                 "batch ids continue (or a fresh state_path for a new "
                 "stream)"
             )
-    versions = _queue_state_versions(root)
+    versions = _queue_state_versions(spark, root)
     if not versions:
         raise RuntimeError(
             f"queue state dir {root} has no committed v<N> state — "
@@ -347,31 +355,11 @@ def _queue_ingest_apply(
     new_state.write.mode("overwrite").parquet(os.path.join(root, f"v{cur + 1}"))
     # retention keeps ONE superseded version: a get_state() frame handed
     # out between batches stays readable across the next batch landing
-    shutil.rmtree(os.path.join(root, f"v{cur - 1}"), ignore_errors=True)
-    # marker last (tmp + atomic rename): a crash between the state
-    # write and the marker leaves marker == bid-1, and the replay of
-    # bid passes the < check — never a false refusal
-    tmp = marker + "__tmp"
-    with open(tmp, "w") as fh:
-        fh.write(str(bid))
-    os.replace(tmp, marker)
-
-
-def _state_root(state_path: str | None, prefix: str) -> str:
-    """Resolve a caller-supplied state directory (created if missing) or
-    a throwaway temp dir.  URIs are refused/normalized by the facades'
-    _check_local_path rule (single-slash forms like ``hdfs:/x``
-    included): the state lifecycle (listing, rename-based compaction
-    swaps, gc) runs through driver-local ``os`` calls, which silently
-    see a ``s3a://...`` string as a relative local path — use
-    Delta/Iceberg for object-store state."""
-    if state_path is None:
-        return tempfile.mkdtemp(prefix=prefix)
-    from wpvectordb_spark.table import _check_local_path
-
-    state_path = _check_local_path(state_path)
-    os.makedirs(state_path, exist_ok=True)
-    return state_path
+    fsutil.delete(spark, os.path.join(root, f"v{cur - 1}"))
+    # marker last (atomic replace): a crash between the state write and
+    # the marker leaves marker == bid-1, and the replay of bid passes
+    # the < check — never a false refusal
+    fsutil.write_text(spark, marker, str(bid))
 
 
 def stream_dedup_ingest(
@@ -429,8 +417,8 @@ def stream_dedup_ingest(
     small-file count) would grow O(N) — O(N^2) cumulative over the
     stream's life.  Once a table holds ``compact_every`` delta dirs
     older than the in-flight batch, they are folded into ONE snapshot
-    dir (``s<upto>`` = all batches <= upto), using the same crash-safe
-    tmp-write + atomic-rename + gc swap as the table facades: a kill at
+    dir (``s<upto>`` = all batches <= upto), written through the table
+    facades' swap (``fsutil.replace_dir``) and then gc'd: a kill at
     any point leaves either the old layout or the new one readable,
     never neither (readers take the max-upto snapshot and ignore delta
     dirs it covers, so pre-gc debris double-counts nothing).  Folding
@@ -445,7 +433,8 @@ def stream_dedup_ingest(
     the streaming checkpoint so a later ``start()`` resumes this
     stream's corpus (existing deltas/snapshots are adopted; the
     checkpoint continues the batch-id sequence — both must be supplied
-    together for a resume).  Defaults stay throwaway temp dirs.
+    together for a resume).  Either may be a local path or a Hadoop
+    URI.  Defaults stay throwaway temp dirs.
 
     Returns ``(get_pairs, get_index, query)``.  The accessors
     re-snapshot the directory layout on EVERY call and return an
@@ -454,12 +443,10 @@ def stream_dedup_ingest(
     the materialization — so the handed-out DataFrame can be consumed
     at leisure without hitting FileNotFound on gc'd deltas.
     """
-    root = _state_root(state_path, "stream_dedup_state_")
+    root = state_path or tempfile.mkdtemp(prefix="stream_dedup_state_")
     sh_dir = os.path.join(root, "sh")
     bands_dir = os.path.join(root, "bands")
     pairs_dir = os.path.join(root, "pairs")
-    for d in (sh_dir, bands_dir, pairs_dir):
-        os.makedirs(d, exist_ok=True)
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         _dedup_ingest_apply(
@@ -493,20 +480,23 @@ _DEDUP_BANDS_SCHEMA = "doc_id long, band_id int, band_key string"
 _DEDUP_PAIRS_SCHEMA = "id_a long, id_b long, jaccard double"
 
 
-def _list_state(root: str) -> tuple[int | None, str | None, list[tuple[int, str]]]:
+def _list_state(
+    spark: SparkSession, root: str
+) -> tuple[int | None, str | None, list[tuple[int, str]]]:
     """One directory listing -> (snapshot coverage, snapshot path, delta
     dirs as (batch_id, path)).  Crash debris is excluded two ways: by
-    NAME (a compaction killed before its atomic rename leaves
-    ``s<u>__tmp`` — not all-digits after the prefix; a kill after the
+    NAME (a compaction killed before its promote leaves
+    ``s<u>__staging`` — not all-digits after the prefix; a kill after the
     rename but before gc leaves older snapshots and covered deltas,
     which the max-upto rule and the caller's coverage filter ignore),
     and by the ``_SUCCESS`` commit marker (a batch write killed mid-way
     leaves a partial delta dir; the in-flight batch will overwrite it on
     replay, but an external accessor listing it meanwhile would read
-    partial rows as if they were committed state)."""
+    partial rows as if they were committed state).  A missing ``root``
+    lists as empty (nothing written yet)."""
     snaps, deltas = [], []
-    for d in os.listdir(root):
-        if not os.path.exists(os.path.join(root, d, "_SUCCESS")):
+    for d, _ in fsutil.list_dir(spark, root):
+        if not fsutil.exists(spark, os.path.join(root, d, "_SUCCESS")):
             continue
         if d.startswith("b") and d[1:].isdigit():
             deltas.append((int(d[1:]), os.path.join(root, d)))
@@ -522,7 +512,7 @@ def _read_state(
     """Read a snapshot + per-batch-delta state table; ``before_batch``
     limits to batches strictly earlier (the in-batch view).  An empty or
     not-yet-written table reads as an empty frame of the right schema."""
-    upto, spath, deltas = _list_state(root)
+    upto, spath, deltas = _list_state(spark, root)
     if upto is not None and before_batch is not None and upto >= before_batch:
         # compaction only ever folds batches < the in-flight one, so a
         # snapshot covering the requesting batch means the state dir was
@@ -626,51 +616,41 @@ def _compact_state(
 ) -> None:
     """Fold the delta dirs of batches strictly before ``before_batch``
     into one snapshot dir once ``compact_every`` of them have
-    accumulated.  Crash-safe swap (same pattern as table._write_snapshot):
-    write ``s<upto>__tmp``, atomic-rename to ``s<upto>``, THEN gc the
-    superseded snapshot and the folded deltas — a kill in any gap leaves
-    a readable layout because readers take the max-coverage snapshot and
-    skip deltas it covers.  Idempotent under batch replay: the folded
-    deltas are gone, so the re-run sees fewer than ``compact_every`` and
-    skips."""
-    import shutil
-
-    upto, spath, deltas = _list_state(root)
+    accumulated.  The new ``s<upto>`` is written through the one swap
+    (``fsutil.replace_dir``: build in ``s<upto>__staging``, promote),
+    THEN the superseded snapshot and the folded deltas are gc'd — a
+    kill in any gap leaves a readable layout because readers take the
+    max-coverage snapshot and skip deltas it covers.  Idempotent under
+    batch replay: the folded deltas are gone, so the re-run sees fewer
+    than ``compact_every`` and skips."""
+    upto, spath, deltas = _list_state(spark, root)
     foldable = [
         (b, p) for b, p in deltas if b < before_batch and (upto is None or b > upto)
     ]
     if len(foldable) < compact_every:
         return
-    # gc debris from any previously crashed fold: stale __tmp dirs (kill
-    # before the rename), plus superseded snapshots and covered deltas
-    # (kill AFTER the rename but before that fold's own gc — readers
-    # ignore them via the max-upto rule, but nothing else would ever
-    # delete them and each such crash leaks a full state copy)
-    for d in os.listdir(root):
-        p = os.path.join(root, d)
-        if d.endswith("__tmp"):
-            shutil.rmtree(p, ignore_errors=True)
-        elif d.startswith("s") and d[1:].isdigit() and int(d[1:]) < (upto or 0):
-            shutil.rmtree(p, ignore_errors=True)
-        elif (
-            upto is not None
-            and d.startswith("b")
-            and d[1:].isdigit()
-            and int(d[1:]) <= upto
+    # gc debris from any previously crashed fold: swap leftovers (a
+    # ``__staging``/``__old`` suffix, or the ``__tmp`` of older state
+    # layouts), plus superseded snapshots and covered deltas (kill
+    # AFTER the promote but before that fold's own gc — readers ignore
+    # them via the max-upto rule, but nothing else would ever delete
+    # them and each such crash leaks a full state copy)
+    for d, _ in fsutil.list_dir(spark, root):
+        digits = d[1:].isdigit()
+        if (
+            "__" in d
+            or (d.startswith("s") and digits and int(d[1:]) < (upto or 0))
+            or (upto is not None and d.startswith("b") and digits and int(d[1:]) <= upto)
         ):
-            shutil.rmtree(p, ignore_errors=True)
+            fsutil.delete(spark, os.path.join(root, d))
     new_upto = max(b for b, _ in foldable)
-    merged = spark.read.schema(schema).parquet(
-        *([spath] if spath else []), *[p for _, p in foldable]
+    folded = ([spath] if spath else []) + [p for _, p in foldable]
+    merged = spark.read.schema(schema).parquet(*folded)
+    fsutil.replace_dir(
+        spark, os.path.join(root, f"s{new_upto}"), merged.write.mode("overwrite").parquet
     )
-    tmp = os.path.join(root, f"s{new_upto}__tmp")
-    final = os.path.join(root, f"s{new_upto}")
-    merged.write.mode("overwrite").parquet(tmp)
-    os.rename(tmp, final)
-    if spath:
-        shutil.rmtree(spath, ignore_errors=True)
-    for _, p in foldable:
-        shutil.rmtree(p, ignore_errors=True)
+    for p in folded:
+        fsutil.delete(spark, p)
 
 
 def _dedup_ingest_apply(
@@ -843,9 +823,8 @@ def stream_ann_serve(
     immune to concurrent compaction swaps.  ``where=`` / ``candidates=``
     apply the batched paths' standing candidate restriction to every
     micro-batch (e.g. serve only a tenant's rows)."""
-    root = _state_root(state_path, "stream_ann_results_")
+    root = state_path or tempfile.mkdtemp(prefix="stream_ann_results_")
     results_dir = os.path.join(root, "results")
-    os.makedirs(results_dir, exist_ok=True)
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         _ann_serve_apply(
@@ -980,9 +959,8 @@ def stream_corpus_profile(
     # would come back string-typed and equality joins against batch
     # profiles would silently miss
     stratum_types = {c: docs_stream.schema[c].dataType for c in stratum_cols}
-    root = _state_root(state_path, "stream_profile_")
+    root = state_path or tempfile.mkdtemp(prefix="stream_profile_")
     sums_dir = os.path.join(root, "sums")
-    os.makedirs(sums_dir, exist_ok=True)
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         _profile_ingest_apply(
@@ -1124,9 +1102,8 @@ def stream_anomaly_monitor(
     calendar-spine treatment to the merged counts)."""
     from wpvectordb_spark.operators import events as E
 
-    root = _state_root(state_path, "stream_anomaly_")
+    root = state_path or tempfile.mkdtemp(prefix="stream_anomaly_")
     counts_dir = os.path.join(root, "counts")
-    os.makedirs(counts_dir, exist_ok=True)
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         _anomaly_ingest_apply(
@@ -1257,9 +1234,8 @@ def stream_distinct_monitor(
     approx_distinct) — the ``approx_distinct_rollup`` columns."""
     from wpvectordb_spark.operators import events as E
 
-    root = _state_root(state_path, "stream_distinct_")
+    root = state_path or tempfile.mkdtemp(prefix="stream_distinct_")
     regs_dir = os.path.join(root, "registers")
-    os.makedirs(regs_dir, exist_ok=True)
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         _distinct_ingest_apply(
@@ -1369,9 +1345,8 @@ def stream_decontaminate_ingest(
     fresh checkpoint.  Returns ``(get_results, query)``."""
     from wpvectordb_spark.functions import text as X
 
-    root = _state_root(state_path, "stream_decon_state_")
+    root = state_path or tempfile.mkdtemp(prefix="stream_decon_state_")
     results_dir = os.path.join(root, "results")
-    os.makedirs(results_dir, exist_ok=True)
     hold_hashes = (
         holdout.select(
             F.explode(X.shingle_hashes("text", shingle_k)).alias("h")

@@ -8,20 +8,21 @@ delegate to the operator modules (all lazy DataFrame plans).
 
 Storage model: each table is a parquet directory; mutating calls rewrite
 the snapshot (single-writer, like the reference's un-transactional MySQL
-usage — VectorTableQueue.php:189-223).  At production scale the same
-facade sits over Delta/Iceberg and mutations become MERGEs; the operator
-layer is unchanged.
+usage — VectorTableQueue.php:189-223).  The path may be a local path
+or any Hadoop URI (``file:/``, ``hdfs://``, ``s3a://``): every swap,
+recovery and listing goes through ``fsutil``.  At production scale the
+same facade sits over Delta/Iceberg and mutations become MERGEs; the
+operator layer is unchanged.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
-import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from wpvectordb_spark import fsutil
 from wpvectordb_spark.operators import queue_ops as Q
 from wpvectordb_spark.operators import search as S
 from wpvectordb_spark.operators import table_ops as TO
@@ -36,101 +37,34 @@ def _utcnow() -> _dt.datetime:
     return _dt.datetime.now(_dt.timezone.utc)
 
 
-def _check_local_path(path: str) -> str:
-    """The facades manage snapshots with driver-local os/shutil calls; a
-    remote URI (hdfs://, s3a://) would read/write fine through Spark but
-    ALWAYS look absent to os.path — init() would then overwrite the
-    existing remote table with an empty one.  Refuse loudly; production
-    state belongs in a transactional table format anyway.
-
-    ``file:`` URIs are NORMALIZED to a plain local path rather than
-    merely allowed through: os.path/os.rename do not understand URIs, so
-    the raw string would hit the exact data-loss the guard exists for
-    (table_exists() false -> create_table() overwrites).  A non-local
-    authority (file://host/...) is refused like any remote scheme.
-
-    URI detection matches ANY scheme prefix (``re``: letter then
-    letters/digits/+.-, then ``:/``), not just ``://``: Hadoop and Spark
-    canonicalize local paths to the SINGLE-slash form (``file:/x``,
-    ``hdfs:/x``), so a path copy-pasted from logs or ``inputFiles()``
-    must not slip past the guard as a weird relative path.  Two-plus
-    letter schemes only: a Windows drive path (``C:/data``) is a local
-    path, not a scheme ``C`` URI (no registered URI scheme is a single
-    letter, so nothing real is lost).  A slashless ``file:relative``
-    form is refused explicitly — it is neither a canonical Hadoop form
-    nor a plain path, and silently treating it as a literal local
-    filename named ``file:relative`` helps no one."""
-    import re
-
-    if re.match(r"^file:(?![/])", path, re.IGNORECASE):
-        raise ValueError(
-            f"malformed file: URI {path!r} (no slash) — pass a plain "
-            "local path or a canonical file:/ URI"
-        )
-    m = re.match(r"^([A-Za-z][A-Za-z0-9+.-]*):/", path)
-    if m is None or len(m.group(1)) == 1:
-        return path
-    if m.group(1).lower() == "file":
-        from urllib.parse import urlparse
-
-        parsed = urlparse(path)
-        if parsed.netloc not in ("", "localhost"):
-            raise ValueError(
-                f"file:// URI with remote authority {parsed.netloc!r} — "
-                "VectorTable/VectorTableQueue manage LOCAL paths only"
-            )
-        return parsed.path
-    raise ValueError(
-        f"VectorTable/VectorTableQueue manage LOCAL paths only, got "
-        f"{path!r} — use Delta/Iceberg (or the operators directly) "
-        "for remote storage"
-    )
-
-
-def _recover_snapshot(path: str) -> None:
-    """Close _write_snapshot's one remaining crash window: a kill between
-    'rename old aside' and 'rename staging in' leaves ``path`` absent
-    with the data intact in ``path__old``.  Every existence check and
-    write first renames that orphan back — otherwise init() would
-    silently recreate the table EMPTY and the next write's cleanup would
-    delete the only copy."""
-    old = path + "__old"
-    if not os.path.exists(path) and os.path.isdir(old):
-        os.rename(old, path)
-
-
 def _write_snapshot(
     path: str, df: DataFrame, partition_by: list[str] | None = None
 ) -> None:
-    """Snapshot rewrite via a staging dir (parquet cannot overwrite in
-    place while reading) — the ONE shared implementation for both
-    facades.  A stale staging dir from a crashed earlier write is
-    removed first so the fresh write never lands inside it.
-
-    Crash-safe swap order: the OLD snapshot is renamed aside (atomic),
-    the new one renamed in (atomic), and only then is the old copy
-    deleted — a kill between steps leaves either the old or the new
-    snapshot in place, never zero copies.  (The delete-then-rename
-    order lost the table on a kill in the gap: init() would then
-    silently recreate it EMPTY.)  Delta/Iceberg replaces this with
-    MERGE/commit.
+    """Snapshot rewrite through ``fsutil.replace_dir`` — the ONE swap
+    shared by both facades and both compactions (parquet cannot
+    overwrite in place while reading, so the new copy is staged first).
+    A kill at any point leaves the old or the new snapshot, never zero
+    copies; Delta/Iceberg replace this with MERGE/commit.
 
     ``partition_by`` writes the staging copy Hive-partitioned (used by
     partition-preserving compaction — operators/maintenance.py); the
     swap itself is layout-agnostic."""
-    _recover_snapshot(path)
-    staging = path + "__staging"
-    old = path + "__old"
-    shutil.rmtree(staging, ignore_errors=True)
-    shutil.rmtree(old, ignore_errors=True)
     writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
-    writer.parquet(staging)
-    if os.path.exists(path):
-        os.rename(path, old)
-    os.rename(staging, path)
-    shutil.rmtree(old, ignore_errors=True)
+    fsutil.replace_dir(df.sparkSession, path, writer.parquet)
+
+
+def _has_snapshot(spark: SparkSession, path: str) -> bool:
+    """Heal swap debris, then: does ``path`` hold a snapshot?  A commit
+    marker or any parquet file counts; a bare pre-created directory
+    (deployment mkdir, crash debris) does not, so ``init`` still seeds
+    it with the schema'd empty snapshot."""
+    fsutil.recover_snapshot(spark, path)
+    return any(
+        name == "_SUCCESS" or name.endswith(".parquet")
+        for name, _ in fsutil.list_dir(spark, path)
+    )
 
 
 class VectorTable:
@@ -144,7 +78,7 @@ class VectorTable:
 
     def __init__(self, spark: SparkSession, path: str, vector_length: int = 1024):
         self.spark = spark
-        self.path = _check_local_path(path)
+        self.path = path
         self.vector_length = vector_length  # VectorTable.php:37 default 1024
 
     # -- DDL (C11, VectorTable.php:464-513) ---------------------------------
@@ -157,23 +91,17 @@ class VectorTable:
         empty.write.mode("overwrite").parquet(self.path)
 
     def drop_table(self) -> None:
-        if os.path.exists(self.path):
-            shutil.rmtree(self.path)
         # a crashed write's staging/old copies would otherwise be
         # orphaned full-table snapshots
-        shutil.rmtree(self.path + "__staging", ignore_errors=True)
-        shutil.rmtree(self.path + "__old", ignore_errors=True)
+        for p in (self.path, self.path + "__staging", self.path + "__old"):
+            fsutil.delete(self.spark, p)
 
     def table_exists(self) -> bool:
-        _recover_snapshot(self.path)
-        return os.path.exists(os.path.join(self.path, "_SUCCESS")) or (
-            os.path.isdir(self.path)
-            and any(f.endswith(".parquet") for f in os.listdir(self.path))
-        )
+        return _has_snapshot(self.spark, self.path)
 
     # -- state --------------------------------------------------------------
     def df(self) -> DataFrame:
-        _recover_snapshot(self.path)
+        fsutil.recover_snapshot(self.spark, self.path)
         return self.spark.read.schema(VECTOR_TABLE_SCHEMA).parquet(self.path)
 
     def _write(self, df: DataFrame) -> None:
@@ -338,22 +266,14 @@ class VectorTableQueue:
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
-        self.path = _check_local_path(path)
+        self.path = path
 
     def init(self) -> None:
-        # same existence rule as VectorTable.table_exists: a bare
-        # pre-created directory (deployment mkdir, crash debris) must
-        # still get the schema'd empty snapshot
-        _recover_snapshot(self.path)
-        has_data = os.path.exists(os.path.join(self.path, "_SUCCESS")) or (
-            os.path.isdir(self.path)
-            and any(f.endswith(".parquet") for f in os.listdir(self.path))
-        )
-        if not has_data:
+        if not _has_snapshot(self.spark, self.path):
             self.spark.createDataFrame([], QUEUE_SCHEMA).write.mode("overwrite").parquet(self.path)
 
     def df(self) -> DataFrame:
-        _recover_snapshot(self.path)
+        fsutil.recover_snapshot(self.spark, self.path)
         return self.spark.read.schema(QUEUE_SCHEMA).parquet(self.path)
 
     def _write(self, df: DataFrame) -> None:
