@@ -127,14 +127,19 @@ _KILL_POINTS = {
 
 
 def _facade_site(spark, path):
+    from wpvectordb_spark.table import _read_log
+
     vt = VectorTable(spark, path, vector_length=2)
     vt.init()
     vt.insert_all(1, [[1.0, 0.0]])
+    vt.insert_all(2, [[0.0, 1.0]])
 
     def read():  # a facade read recovers first
-        return sorted((r["post_id"], r["sequence_no"]) for r in vt.get_all().collect())
+        rows = sorted((r["post_id"], r["sequence_no"]) for r in vt.get_all().collect())
+        return len(_read_log(spark, path)), rows
 
-    return lambda: vt.insert_all(2, [[0.0, 1.0]]), read, [(1, 0), (2, 0)]
+    # the fold keeps the rows and empties the log
+    return vt.compact, read, (0, [(1, 0), (2, 0)])
 
 
 def _compact_site(partitioned):
@@ -230,6 +235,204 @@ def test_replace_dir_kill_points(spark, tmp_path, monkeypatch, site, boundary, f
     assert fsutil.is_dir(spark, path)
     assert not fsutil.exists(spark, path + "__old")
     assert fsutil.exists(spark, path + "__staging") == (boundary != "before_drop")
+
+
+@pytest.mark.parametrize("form", ["plain", "file_uri"])
+@pytest.mark.parametrize("boundary", ["before_head_rename", "after_head_rename"])
+def test_log_commit_kill_points(spark, tmp_path, monkeypatch, boundary, form):
+    """A write's commit point is the atomic ``_log`` head rename.  A kill
+    before it leaves the old rows (the written delta is debris, and the
+    next write reuses its number and overwrites it); a kill after it
+    leaves the new rows."""
+    from wpvectordb_spark import fsutil
+
+    local = str(tmp_path / "t")
+    path = local if form == "plain" else _as_uri(local)
+    vt = VectorTable(spark, path, vector_length=2)
+    vt.init()
+    vt.insert_all(1, [[1.0, 0.0]])
+
+    def rows():
+        return sorted((r["id"], r["post_id"], r["sequence_no"]) for r in vt.get_all().collect())
+
+    real = fsutil.write_text
+
+    def dying(spark_, p, text):
+        # before: only the tmp copy lands (write_text's own tmp name)
+        real(spark_, p + "__tmp" if boundary == "before_head_rename" else p, text)
+        raise _Killed(boundary)
+
+    monkeypatch.setattr(fsutil, "write_text", dying)
+    with pytest.raises(_Killed):
+        vt.insert_all(2, [[0.0, 1.0], [1.0, 1.0]])
+    monkeypatch.undo()
+
+    debris = f"{local}/_delta-2"
+    if boundary == "before_head_rename":
+        assert rows() == [(1, 1, 0)]
+        assert spark.read.parquet(debris).count() == 2  # uncommitted delta
+        vt.insert_all(3, [[0.5, 0.5]])
+        assert rows() == [(1, 1, 0), (2, 3, 0)]
+        # the debris dir was overwritten, not appended to
+        assert [r["post_id"] for r in spark.read.parquet(debris).collect()] == [3]
+    else:
+        assert rows() == [(1, 1, 0), (2, 2, 0), (3, 2, 1)]
+        vt.insert_all(3, [[0.5, 0.5]])
+        assert rows() == [(1, 1, 0), (2, 2, 0), (3, 2, 1), (4, 3, 0)]
+
+
+def _check_log_against_model(spark, path: str, seed: int) -> None:
+    """A random sequence of insert_all / upsert / delete / compact against
+    a Python model of the table.  The model's rules: insert_all replaces
+    the post's chunks, and new ids number on from the largest id left
+    (in sequence order); upsert keeps a replaced row's id and
+    created_at, and a NULL vector_type keeps the stored one; delete
+    drops one id."""
+    import math
+    import random
+
+    rng = random.Random(seed)
+    vt = VectorTable(spark, path, vector_length=2)
+    vt.init()
+    # (post_id, sequence_no) -> [id, vector, vector_type, created_at]
+    model: dict[tuple[int, int], list] = {}
+
+    def top() -> int:
+        return max((row[0] for row in model.values()), default=0)
+
+    def vec():
+        return [float(rng.randint(-4, 4)) / 2, float(rng.randint(1, 4)) / 2]
+
+    for step in range(20):
+        op = rng.choice(["insert_all"] * 4 + ["upsert"] * 3 + ["delete"] * 2 + ["compact"])
+        if op == "insert_all":
+            post, vectors = rng.randint(1, 4), [vec() for _ in range(rng.randint(0, 3))]
+            vt.insert_all(post, vectors)
+            model = {k: v for k, v in model.items() if k[0] != post}
+            start = top()
+            for i, v in enumerate(vectors):
+                model[(post, i)] = [start + 1 + i, v, None, None]
+        elif op == "upsert":
+            # an existing key half the time: the replace path
+            key = rng.choice(sorted(model)) if model and rng.random() < 0.5 else (
+                rng.randint(1, 4), rng.randint(0, 3))
+            v, vtype = vec(), rng.choice([None, "a", "b"])
+            vt.upsert(key[0], key[1], v, vtype)
+            if key in model:
+                row = model[key]
+                model[key] = [row[0], v, row[2] if vtype is None else vtype, row[3]]
+            else:
+                model[key] = [top() + 1, v, vtype, None]
+        elif op == "delete":
+            ids = [row[0] for row in model.values()]
+            id_ = rng.choice(ids + [top() + 5])
+            vt.delete(id_)
+            model = {k: v for k, v in model.items() if v[0] != id_}
+        else:
+            vt.compact()
+        rows = vt.get_all().collect()
+        got = {(r["post_id"], r["sequence_no"]): r for r in rows}
+        assert len(rows) == len(got) and sorted(got) == sorted(model), (step, op)
+        for key, row in model.items():
+            r = got[key]
+            assert [r["id"], r["vector"], r["vector_type"]] == row[:3], (step, op, key)
+            assert r["magnitude"] == pytest.approx(math.hypot(*row[1]))
+            if row[3] is None:
+                row[3] = r["created_at"]  # first sighting of a new row
+            assert r["created_at"] == row[3], (step, op, key)
+
+
+@pytest.mark.parametrize("form", ["plain", "file_uri"])
+def test_delta_log_matches_model(spark, tmp_path, monkeypatch, form):
+    from wpvectordb_spark import table
+
+    # a short log, so the sequence also takes the fold-first path
+    monkeypatch.setattr(table, "MAX_LOG_ENTRIES", 4)
+    local = str(tmp_path / "t")
+    # seed 17 runs every case: 3 folds, 5 replacing upserts (one with a
+    # NULL vector_type), new-key upserts, empty and non-empty insert_all,
+    # deletes that hit and miss, an explicit compact
+    _check_log_against_model(spark, local if form == "plain" else _as_uri(local), seed=17)
+
+
+def test_delta_log_reads_are_one_scan(spark, tmp_path):
+    """With deltas pending, ``df()`` is ONE parquet scan and no Union,
+    and the filtered search starts as many Spark jobs as after the fold;
+    ``delete`` starts none."""
+    import functools
+
+    import pyarrow as pa
+
+    from tests.test_cache_lifecycle import _jobs_started
+    from wpvectordb_spark.plans.query_builder import Filter, QueryBuilder
+
+    jobs = functools.partial(_jobs_started, spark.sparkContext)
+    vt = VectorTable(spark, str(tmp_path / "t"), vector_length=4)
+    vt.init()
+    for post in range(1, 7):
+        vt.insert_all(post, [[float(post), 1.0, -1.0, 0.5], [0.5, float(-post), 1.0, 1.0]])
+    vt.compact()
+    vt.insert_all(2, [[1.0, 1.0, 1.0, 1.0]])
+    vt.upsert(5, 0, [2.0, -1.0, 0.0, 1.0])
+    assert jobs(lambda: vt.delete(3))[1] == 0
+
+    plan = vt.df()._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan parquet") == 1
+    assert "Union" not in plan
+
+    # LocalRelation inputs (sized at planning) keep the candidate side's
+    # adaptive plan, and so its job count, the same run to run
+    posts = list(range(1, 7))
+    documents = spark.createDataFrame(pa.table({"post_id": posts}))
+    doc_meta = spark.createDataFrame(pa.table({
+        "post_id": posts,
+        "meta_key": ["lang"] * len(posts),
+        "meta_value": ["en" if p % 2 else "de" for p in posts],
+    }))
+    builder = QueryBuilder().add_filter("lang", Filter("lang", "=", "en", is_meta=True))
+
+    def search():
+        return vt.search([1.0, 1.0, -1.0, 0.5], n=3, builder=builder,
+                         documents=documents, doc_meta=doc_meta).collect()
+
+    pending, pending_jobs = jobs(search)
+    vt.compact()
+    folded, folded_jobs = jobs(search)
+    assert pending == folded
+    assert [r["post_id"] % 2 for r in pending] == [1, 1, 1]
+    assert pending_jobs == folded_jobs
+
+
+def test_facades_build_driver_rows_through_arrow(spark, tmp_path, monkeypatch):
+    """Every frame the facades build from driver data is a LocalRelation
+    (Arrow), never the Python-RDD list path's LogicalRDD."""
+    session_cls = type(spark)
+    real = session_cls.createDataFrame
+    built = []
+
+    def spy(self, *args, **kwargs):
+        df = real(self, *args, **kwargs)
+        built.append(df)
+        return df
+
+    monkeypatch.setattr(session_cls, "createDataFrame", spy)
+    vt = VectorTable(spark, str(tmp_path / "v"), vector_length=2)
+    vt.init()
+    vt.insert_all(1, [[1.0, 0.0], [0.0, 1.0]])
+    vt.upsert(1, 0, [2.0, 0.0])
+    q = VectorTableQueue(spark, str(tmp_path / "q"))
+    q.init()
+    q.add_posts([1, 2, 3])
+    batch = q.get_next_batch(2)
+    assert q.get_stats()["processing"] == 2
+    monkeypatch.undo()
+
+    assert len(built) >= 7
+    frames = built + [batch, vt.df(), q.df()]
+    plans = [df._jdf.queryExecution().logical().toString() for df in frames]
+    assert not [p for p in plans if "LogicalRDD" in p]
+    assert sorted(r["job_id"] for r in batch.collect()) == [1, 2]
+    assert {r["status"] for r in batch.collect()} == {"pending"}
 
 
 def test_facade_guards(spark, tmp_path):

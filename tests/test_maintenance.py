@@ -223,6 +223,34 @@ def test_compact_refuses_partitioned_layout(spark, tmp_path):
         M.compact_table(spark, path)
 
 
+def test_compact_refuses_pending_delta_log(spark, tmp_path):
+    """Both rewrites read only a table's base; over a VectorTable with
+    pending log entries their swap would also delete the deltas and the
+    tombstones.  They must refuse and leave the table as it was."""
+    import json
+
+    from wpvectordb_spark import fsutil
+    from wpvectordb_spark.table import VectorTable
+
+    vt = VectorTable(spark, str(tmp_path / "vt"), vector_length=2)
+    vt.init()
+    vt.insert_all(1, [[1.0, 0.0], [0.0, 1.0]])
+    vt.delete(1)
+    with pytest.raises(ValueError, match="pending delta-log"):
+        M.compact_table(spark, vt.path, sort_by=["post_id"])
+    assert [(r["id"], r["sequence_no"]) for r in vt.get_all().collect()] == [(2, 1)]
+    assert vt.compact()["skipped"] is False  # the facade folds instead
+    M.compact_table(spark, vt.path, sort_by=["post_id"])  # empty log: allowed
+
+    path = str(tmp_path / "p")
+    spark.range(8).withColumn("b", F.col("id") % 2).write.partitionBy("b").parquet(path)
+    entry = {"seq": 1, "data": False, "post_ids": [], "ids": [3]}
+    fsutil.write_text(spark, f"{path}/_log", json.dumps({"entries": [entry]}))
+    with pytest.raises(ValueError, match="pending delta-log"):
+        M.compact_partitioned_table(spark, path)
+    assert spark.read.parquet(path).count() == 8
+
+
 def test_compact_partitioned_preserves_layout_and_rows(spark, tmp_path):
     path = str(tmp_path / "t")
     ev = _events(spark).withColumn("b", (F.col("user_id") % 4).cast("int"))

@@ -216,7 +216,7 @@ def test_upsert_preserves_id_and_created_at(spark):
     assert out[1]["created_at"] == old  # kept
     assert out[1]["updated_at"] != old  # refreshed
     assert out[1]["magnitude"] == pytest.approx(2.0)  # recomputed
-    assert out[2]["id"] is None  # brand-new key awaits _with_ids
+    assert out[2]["id"] is None  # brand-new key: the caller numbers it
 
 
 def test_delete_and_insert_all_keep_null_key_rows(spark):

@@ -243,13 +243,10 @@ def compact_table(
     than ``min_files`` files AND no clustering was requested — pure
     bin-packing a single file is a wasted rewrite, but an explicit
     ``sort_by``/``zorder_by`` always rewrites (the point is the order,
-    not the count).
+    not the count).  A ``VectorTable`` dir with pending delta-log entries
+    is refused: this reads only the base (``VectorTable.compact`` folds
+    the log).
     """
-    # import here: table.py is facade-layer (imports operators); the
-    # one-way dep operators -> table stays acyclic but keep it local so
-    # module import order never matters
-    from wpvectordb_spark.table import _write_snapshot
-
     pcols = partition_columns(spark, path)
     if pcols:
         # reading a partitioned table and rewriting it flat would
@@ -259,13 +256,44 @@ def compact_table(
             f"compact_table: {path!r} is Hive-partitioned by {pcols} — "
             "use compact_partitioned_table, which preserves the layout"
         )
+    _refuse_pending_log(spark, path, "compact_table")
     before = table_file_stats(spark, path)
     if before["n_files"] == 0:
         raise ValueError(f"compact_table: no parquet files under {path!r}")
     if before["n_files"] < min_files and not (sort_by or zorder_by):
         return {"before": before, "after": before, "skipped": True}
+    return rewrite_table(
+        spark,
+        path,
+        spark.read.parquet(path),
+        target_file_bytes,
+        sort_by=sort_by,
+        zorder_by=zorder_by,
+        zorder_bits=zorder_bits,
+    )
+
+
+def rewrite_table(
+    spark: SparkSession,
+    path: str,
+    df: DataFrame,
+    target_file_bytes: int = DEFAULT_TARGET_FILE_BYTES,
+    sort_by: list[str] | None = None,
+    zorder_by: list[str] | None = None,
+    zorder_bits: int = 8,
+) -> dict:
+    """The rewrite half of ``compact_table``: swap ``df`` — the rows
+    ``path`` holds, read the way its layout needs (``VectorTable.compact``
+    passes its base + delta-log view) — in as the new flat snapshot,
+    bin-packed to ``target_file_bytes`` of the current on-disk bytes and
+    optionally clustered.  Returns the before/after report."""
+    # import here: table.py is facade-layer (imports operators); the
+    # one-way dep operators -> table stays acyclic but keep it local so
+    # module import order never matters
+    from wpvectordb_spark.table import _write_snapshot
+
+    before = table_file_stats(spark, path)
     n_out = max(1, math.ceil(before["total_bytes"] / target_file_bytes))
-    df = spark.read.parquet(path)
     plan = compact_plan(
         df, n_out, sort_by=sort_by, zorder_by=zorder_by, zorder_bits=zorder_bits
     )
@@ -279,6 +307,21 @@ def compact_table(
         "skipped": False,
         "n_output_files_target": n_out,
     }
+
+
+def _refuse_pending_log(spark: SparkSession, path: str, op: str) -> None:
+    """A ``VectorTable`` dir with log entries holds rows (and tombstones)
+    outside its base: a rewrite that reads only the base would drop them,
+    and its swap would delete the deltas.  Refuse; the facade's
+    ``compact()`` folds them."""
+    from wpvectordb_spark.table import _read_log
+
+    pending = _read_log(spark, path)
+    if pending:
+        raise ValueError(
+            f"{op}: {path!r} has {len(pending)} pending delta-log entries — "
+            "fold them with VectorTable.compact()"
+        )
 
 
 def compact_partitioned_table(
@@ -317,6 +360,7 @@ def compact_partitioned_table(
             f"compact_partitioned_table: {path!r} has no key=value "
             "partition dirs — use compact_table"
         )
+    _refuse_pending_log(spark, path, "compact_partitioned_table")
     before = table_file_stats(spark, path)
     if before["n_files"] == 0:
         raise ValueError(

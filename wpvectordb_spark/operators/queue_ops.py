@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import datetime as _dt
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -198,8 +199,9 @@ def stats(queue: DataFrame) -> DataFrame:
     reference: its five separate COUNTs report every status even when
     empty, so a bare groupBy (which drops absent statuses) would make
     ``get_stats()['pending']`` a KeyError on an empty queue."""
+    # the status list through Arrow: a LocalRelation, not a Python RDD
     statuses = queue.sparkSession.createDataFrame(
-        [(s,) for s in sorted(STATUSES)], "status string"
+        pa.table({"status": sorted(STATUSES)})
     )
     counts = queue.groupBy("status").agg(F.count("*").alias("n"))
     return statuses.join(counts, "status", "left").select(

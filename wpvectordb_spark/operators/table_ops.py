@@ -14,8 +14,10 @@ cap of 100,000 rows (VectorTable.php:333).
 
 Scale notes: ``derive`` is a narrow map (no shuffle); ``upsert`` shuffles
 once on ``(post_id, sequence_no)``; ``insert_all`` is a partition-overwrite
-pattern — at 100 TB write the table partitioned by a post_id bucket so the
-anti-filter prunes files instead of rewriting the world.
+pattern.  The ``VectorTable`` facade never rewrites the table for them: it
+runs ``upsert`` over the touched key's current row only and
+``replacement_rows`` over the incoming chunks, and appends the result as
+one delta of its log (table.py).
 """
 
 from __future__ import annotations
@@ -64,10 +66,11 @@ def upsert(
     ``updated_at`` + derived columns (recomputed — fixing quirk §4.4.4's
     stale magnitude); an incoming NULL ``vector_type`` keeps the stored
     one; a brand-new key gets created_at = now and a NULL id for the
-    caller's AUTO_INCREMENT pass (``table._with_ids``).  Duplicate keys
-    WITHIN ``new_chunks`` resolve deterministically (xxhash64 of the
-    vector + vector_type breaks the tie) — a DataFrame batch has no
-    "last write", unlike the reference's sequential upsert loop.
+    caller's AUTO_INCREMENT numbering (the facade numbers on from the
+    largest id left).  Duplicate keys WITHIN ``new_chunks`` resolve
+    deterministically (xxhash64 of the vector + vector_type breaks the
+    tie) — a DataFrame batch has no "last write", unlike the
+    reference's sequential upsert loop.
 
     Rows whose key is NOT in the batch pass through VERBATIM (anti-join
     split): the reference upsert only touches the given key, so the
@@ -127,18 +130,17 @@ def upsert(
     return untouched.unionByName(merged_out, allowMissingColumns=True)
 
 
-def insert_all(
-    table: DataFrame,
+def replacement_rows(
     post_id: int,
     new_chunks: DataFrame,
     vector_col: str = "vector",
 ) -> DataFrame:
-    """C8 document replacement (VectorTable.php:401-425): delete every
-    chunk of ``post_id``, append the new derived chunks — expressed as an
-    anti-filter + union (partition-overwrite semantics on disk).  The
-    filter is null-safe: MySQL's ``DELETE WHERE post_id = x`` never
-    touches NULL-key rows, while a plain ``!=`` predicate would silently
-    drop them.
+    """The incoming half of C8 ``insert_all``: ``new_chunks`` checked to
+    belong to ``post_id``, one row per ``sequence_no``, derived and
+    timestamped — the rows that replace the post's chunks, without the
+    table they replace them in (``insert_all`` adds the anti-filter; the
+    facade's delta log records the same delete as a ``post_id``
+    tombstone).
 
     The (post_id, sequence_no) unique-key invariant is enforced on the
     way in: rows for a DIFFERENT post are REFUSED — in-plan via
@@ -172,9 +174,24 @@ def insert_all(
             F.bitwise_not(F.xxhash64(F.col(vector_col))),
         ).alias("_w")
     ).select("_w.*")
-    incoming = derive(winner, vector_col).withColumn("created_at", now).withColumn(
+    return derive(winner, vector_col).withColumn("created_at", now).withColumn(
         "updated_at", now
     )
+
+
+def insert_all(
+    table: DataFrame,
+    post_id: int,
+    new_chunks: DataFrame,
+    vector_col: str = "vector",
+) -> DataFrame:
+    """C8 document replacement (VectorTable.php:401-425): delete every
+    chunk of ``post_id``, append the new derived chunks
+    (``replacement_rows``) — expressed as an anti-filter + union
+    (partition-overwrite semantics on disk).  The filter is null-safe:
+    MySQL's ``DELETE WHERE post_id = x`` never touches NULL-key rows,
+    while a plain ``!=`` predicate would silently drop them."""
+    incoming = replacement_rows(post_id, new_chunks, vector_col)
     return table.where(~F.col("post_id").eqNullSafe(F.lit(post_id))).unionByName(
         incoming, allowMissingColumns=True
     )

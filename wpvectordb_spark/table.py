@@ -6,21 +6,33 @@ method name and argument shape matches the reference so a caller can
 switch engines without relearning the API, while the implementations
 delegate to the operator modules (all lazy DataFrame plans).
 
-Storage model: each table is a parquet directory; mutating calls rewrite
-the snapshot (single-writer, like the reference's un-transactional MySQL
-usage — VectorTableQueue.php:189-223).  The path may be a local path
-or any Hadoop URI (``file:/``, ``hdfs://``, ``s3a://``): every swap,
-recovery and listing goes through ``fsutil``.  At production scale the
-same facade sits over Delta/Iceberg and mutations become MERGEs; the
-operator layer is unchanged.
+Storage model: each table is a parquet directory, single-writer like
+the reference's un-transactional MySQL usage
+(VectorTableQueue.php:189-223).  The queue's mutating calls rewrite
+its (small) snapshot.  The vector table is a base snapshot plus a
+delta log: ``insert_all`` and ``upsert`` append one ``_delta-<n>/``
+dir of new rows under the base, ``delete`` appends a tombstone only,
+and one atomic ``_log`` head lists the committed deltas and the
+``post_id`` / ``id`` tombstones each one carries.  Reads scan base +
+deltas in one parquet scan and drop tombstoned rows with one literal
+predicate; ``compact()`` (or a write that finds the log full) folds
+them back into a new base.  The path may be a local path or any
+Hadoop URI (``file:/``, ``hdfs://``, ``s3a://``): every swap,
+recovery, listing and log write goes through ``fsutil``.  At
+production scale the same facade sits over Delta/Iceberg, whose commit
+log this layout mirrors; the operator layer is unchanged.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
+import json
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from wpvectordb_spark import fsutil
 from wpvectordb_spark.operators import queue_ops as Q
@@ -55,6 +67,44 @@ def _write_snapshot(
     fsutil.replace_dir(df.sparkSession, path, writer.parquet)
 
 
+def _local_frame(
+    spark: SparkSession, schema: T.StructType, columns: dict | None = None
+) -> DataFrame:
+    """Driver-built rows as a ``LocalRelation``: built through Arrow,
+    never the Python-RDD list path, whose ``LogicalRDD`` pickles every
+    row through a Python worker (PERFORMANCE.md item 48).  The rows are
+    few by construction, so they stay ONE partition: a per-key dedup
+    over them (``TO.replacement_rows``, ``Q.add_posts``) then needs no
+    shuffle, and no extra Spark job.  ``columns`` maps each field of
+    ``schema`` to its values; no ``columns`` is the empty table."""
+    arrow = to_arrow_schema(schema)
+    if not columns:
+        return spark.createDataFrame(arrow.empty_table())
+    return spark.createDataFrame(
+        pa.table([pa.array(columns[f.name], f.type) for f in arrow], schema=arrow)
+    ).coalesce(1)
+
+
+# -- the vector table's delta log -------------------------------------------
+_LOG = "_log"
+# A write that finds this many log entries folds them into the base
+# first: reads pay one tombstone term per entry and one scan root per
+# delta, so the log stays short.
+MAX_LOG_ENTRIES = 16
+_SCAN_SCHEMA = T.StructType(
+    VECTOR_TABLE_SCHEMA.fields + [T.StructField("_seq", T.IntegerType(), True)]
+)
+
+
+def _read_log(spark: SparkSession, path: str) -> list[dict]:
+    """The committed log entries of the table at ``path``, oldest first:
+    ``{"seq", "data", "post_ids", "ids"}`` — ``data`` says whether
+    ``_delta-<seq>/`` holds rows; the tombstones drop rows of an earlier
+    ``seq`` (the base is seq 0).  No head, no entries."""
+    text = fsutil.read_text(spark, f"{path}/{_LOG}")
+    return json.loads(text)["entries"] if text else []
+
+
 def _has_snapshot(spark: SparkSession, path: str) -> bool:
     """Heal swap debris, then: does ``path`` hold a snapshot?  A commit
     marker or any parquet file counts; a bare pre-created directory
@@ -67,14 +117,23 @@ def _has_snapshot(spark: SparkSession, path: str) -> bool:
     )
 
 
+# the driver-built incoming rows of insert_all / upsert
+_CHUNK_SCHEMA = T.StructType(
+    [VECTOR_TABLE_SCHEMA[c] for c in ("post_id", "sequence_no", "vector")]
+)
+_UPSERT_SCHEMA = T.StructType(_CHUNK_SCHEMA.fields + [VECTOR_TABLE_SCHEMA["vector_type"]])
+_JOB_SCHEMA = T.StructType([QUEUE_SCHEMA["job_id"], QUEUE_SCHEMA["post_id"]])
+
+
 class VectorTable:
     """Parquet-backed vector table with the reference's method surface
     (VectorTable.php:30-633).
 
-    Read methods return LAZY DataFrames over the current snapshot:
-    consume them before the next mutating call — a write swaps the
-    snapshot files out underneath a pending plan (collect first, as
-    ``get_next_batch`` does, when interleaving reads and writes)."""
+    Read methods return LAZY DataFrames over the table as it stands:
+    a write only adds a delta and a new log head, so a pending plan keeps
+    reading the table as it was when built — until a compaction (which a
+    write runs itself once the log is full) swaps its files out, so
+    consume reads before compacting."""
 
     def __init__(self, spark: SparkSession, path: str, vector_length: int = 1024):
         self.spark = spark
@@ -87,8 +146,8 @@ class VectorTable:
             self.create_table()
 
     def create_table(self) -> None:
-        empty = self.spark.createDataFrame([], VECTOR_TABLE_SCHEMA)
-        empty.write.mode("overwrite").parquet(self.path)
+        # overwrite drops any earlier log and deltas with the base
+        _local_frame(self.spark, VECTOR_TABLE_SCHEMA).write.mode("overwrite").parquet(self.path)
 
     def drop_table(self) -> None:
         # a crashed write's staging/old copies would otherwise be
@@ -102,10 +161,69 @@ class VectorTable:
     # -- state --------------------------------------------------------------
     def df(self) -> DataFrame:
         fsutil.recover_snapshot(self.spark, self.path)
-        return self.spark.read.schema(VECTOR_TABLE_SCHEMA).parquet(self.path)
+        return self._read(_read_log(self.spark, self.path))
 
-    def _write(self, df: DataFrame) -> None:
-        _write_snapshot(self.path, df)
+    def _delta(self, seq: int) -> str:
+        return f"{self.path}/_delta-{seq}"
+
+    def _read(self, log: list[dict]) -> DataFrame:
+        """Base + every delta of ``log`` in ONE parquet scan (the Spark
+        listing skips the ``_``-named deltas under the base, so each is
+        its own root), minus the rows a later entry tombstoned.  One
+        scan, not a ``Union`` of base and deltas: Catalyst pushes a
+        search's candidate semi-join into every branch of a union,
+        doubling its jobs."""
+        if not log:
+            return self.spark.read.schema(VECTOR_TABLE_SCHEMA).parquet(self.path)
+        roots = [self._delta(e["seq"]) for e in log if e["data"]]
+        scan = self.spark.read.schema(_SCAN_SCHEMA).parquet(self.path, *roots)
+        seq = F.coalesce(F.col("_seq"), F.lit(0))
+        dropped = F.lit(False)
+        for e in log:
+            for col, key in (("post_id", "post_ids"), ("id", "ids")):
+                if e[key]:
+                    # NULL keys are never tombstoned (MySQL DELETE semantics)
+                    hit = F.coalesce(F.col(col).isin(e[key]), F.lit(False))
+                    dropped = dropped | ((seq < e["seq"]) & hit)
+        return scan.where(~dropped).drop("_seq")
+
+    def _open_log(self) -> tuple[list[dict], int]:
+        """Recover, then (log, next seq) for one write; a full log is
+        folded into the base first.  The next seq reuses the number of
+        an uncommitted delta a killed write left behind, and the write
+        overwrites that debris."""
+        fsutil.recover_snapshot(self.spark, self.path)
+        log = _read_log(self.spark, self.path)
+        if len(log) >= MAX_LOG_ENTRIES:
+            self.compact()
+            log = []
+        return log, (log[-1]["seq"] if log else 0) + 1
+
+    def _append(
+        self, log: list[dict], entry: dict, rows: DataFrame | None = None
+    ) -> None:
+        """Write ``rows`` (table columns, ``id`` numbered) as the entry's
+        delta, then commit: one atomic rewrite of the ``_log`` head.  A
+        kill before the head lands leaves the old table; the delta dir
+        is debris the next write overwrites."""
+        if rows is not None:
+            rows.select(
+                *[
+                    (F.col(f.name) if f.name in rows.columns else F.lit(None))
+                    .cast(f.dataType)
+                    .alias(f.name)
+                    for f in VECTOR_TABLE_SCHEMA
+                ],
+                F.lit(entry["seq"]).alias("_seq"),
+            ).write.mode("overwrite").parquet(self._delta(entry["seq"]))
+        fsutil.write_text(
+            self.spark, f"{self.path}/{_LOG}", json.dumps({"entries": log + [entry]})
+        )
+
+    def _max_id(self, log: list[dict]) -> int:
+        """The largest id left in the table ``log`` describes — a
+        column-pruned aggregate, one job."""
+        return self._read(log).agg(F.max("id")).first()[0] or 0
 
     # -- reads (C1-C6) ------------------------------------------------------
     def id(self, id_: int) -> DataFrame:
@@ -148,72 +266,54 @@ class VectorTable:
         vector: list[float],
         vector_type: str = "",
     ) -> None:
+        """C7: ``TO.upsert`` over the key's current row only; the delta
+        holds the one merged row (its id and created_at kept, or the next
+        id for a new key) and the entry tombstones the replaced id."""
         self._check_length(vector)
-        new = self.spark.createDataFrame(
-            [(int(post_id), int(sequence_no), [float(x) for x in vector], vector_type)],
-            "post_id long, sequence_no int, vector array<float>, vector_type string",
+        log, seq = self._open_log()
+        table = self._read(log)
+        key = (F.col("post_id") == int(post_id)) & (F.col("sequence_no") == int(sequence_no))
+        top, old_ids = table.agg(
+            F.max("id"), F.collect_list(F.when(key, F.col("id")))
+        ).first()
+        new = _local_frame(self.spark, _UPSERT_SCHEMA, {
+            "post_id": [int(post_id)],
+            "sequence_no": [int(sequence_no)],
+            "vector": [[float(x) for x in vector]],
+            "vector_type": [vector_type],
+        })
+        rows = TO.upsert(table.where(key), new).withColumn(
+            "id", F.coalesce(F.col("id"), F.lit((top or 0) + 1))
         )
-        merged = TO.upsert(self.df(), new)
-        self._write(self._with_ids(merged))
+        entry = {"seq": seq, "data": True, "post_ids": [], "ids": sorted(old_ids)}
+        self._append(log, entry, rows)
 
     def insert_all(self, post_id: int, vectors: list[list[float]]) -> None:
+        """C8: the entry tombstones every earlier chunk of ``post_id``;
+        the delta holds ``TO.replacement_rows`` numbered on from the
+        largest id left, in sequence order."""
         for v in vectors:
             self._check_length(v)
-        new = self.spark.createDataFrame(
-            [
-                (int(post_id), i, [float(x) for x in v])
-                for i, v in enumerate(vectors)
-            ],
-            "post_id long, sequence_no int, vector array<float>",
-        )
-        merged = TO.insert_all(self.df(), post_id, new)
-        self._write(self._with_ids(merged))
+        post_id = int(post_id)
+        log, seq = self._open_log()
+        entry = {"seq": seq, "data": bool(vectors), "post_ids": [post_id], "ids": []}
+        rows = None
+        if vectors:
+            top = self._max_id(log + [dict(entry, data=False)])
+            chunks = _local_frame(self.spark, _CHUNK_SCHEMA, {
+                "post_id": [post_id] * len(vectors),
+                "sequence_no": list(range(len(vectors))),
+                "vector": [[float(x) for x in v] for v in vectors],
+            })
+            rows = TO.replacement_rows(post_id, chunks).withColumn(
+                "id", F.col("sequence_no") + F.lit(top + 1)
+            )
+        self._append(log, entry, rows)
 
     def delete(self, id_: int) -> None:
-        self._write(TO.delete(self.df(), id_))
-
-    def _with_ids(self, df: DataFrame) -> DataFrame:
-        """Assign stable surrogate ids to rows missing one (AUTO_INCREMENT
-        analog): contiguous ids in (post_id, sequence_no) order starting at
-        max(id) + 1.
-
-        Scale shape — NO global window and NO driver collect: row_number
-        runs per ``post_id`` partition; the per-post starting offsets come
-        from a window over the tiny per-post count aggregate (rows =
-        #posts, not #chunks) broadcast back; max(id) rides the same
-        broadcast as a 1-row cross join."""
-        from pyspark.sql import Window
-
-        missing = df.where(F.col("id").isNull())
-        counts = missing.groupBy("post_id").agg(F.count("*").alias("_n"))
-        # bounded(<=#posts): window over the per-post COUNT aggregate —
-        # one row per post needing ids, never the chunk table
-        w_off = (
-            Window.orderBy(F.col("post_id").asc_nulls_first())
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        # window over the per-post aggregate only: one row per post
-        offsets = counts.select(
-            F.col("post_id").alias("_off_post"),
-            F.coalesce(F.sum("_n").over(w_off), F.lit(0)).alias("_offset"),
-        )
-        mx = df.agg(F.coalesce(F.max("id"), F.lit(0)).alias("_max_id"))
-        w_local = Window.partitionBy("post_id").orderBy(F.col("sequence_no").asc())
-        # eqNullSafe: groupBy keeps a NULL post_id group, so a plain join
-        # on post_id would silently DROP missing-id rows with NULL keys
-        numbered = (
-            missing.join(
-                F.broadcast(offsets),
-                F.col("post_id").eqNullSafe(F.col("_off_post")),
-            )
-            .crossJoin(F.broadcast(mx))
-            .withColumn(
-                "id",
-                F.col("_max_id") + F.col("_offset") + F.row_number().over(w_local),
-            )
-            .drop("_off_post", "_offset", "_max_id")
-        )
-        return df.where(F.col("id").isNotNull()).unionByName(numbered)
+        """C9: a tombstone entry only — no data dir, no Spark job."""
+        log, seq = self._open_log()
+        self._append(log, {"seq": seq, "data": False, "post_ids": [], "ids": [int(id_)]})
 
     # -- maintenance ----------------------------------------------------------
     def compact(
@@ -221,18 +321,20 @@ class VectorTable:
         target_file_bytes: int | None = None,
         sort_by: tuple[str, ...] = ("post_id", "sequence_no"),
     ) -> dict:
-        """OPTIMIZE the snapshot: bin-pack small files and cluster on the
-        read-path key so C1-C5 point/post lookups prune files by parquet
-        min/max stats (operators/maintenance.py).  The MySQL reference
-        gets this from InnoDB's clustered primary key for free
-        (VectorTable.php:472 PRIMARY KEY (id)); a parquet snapshot has to
-        re-establish it after enough incremental writes.  Same crash-safe
-        swap as every other write."""
+        """OPTIMIZE: fold base + deltas into a new base, bin-packed and
+        clustered on the read-path key so C1-C5 point/post lookups prune
+        files by parquet min/max stats (operators/maintenance.py).  The
+        MySQL reference gets this from InnoDB's clustered primary key for
+        free (VectorTable.php:472 PRIMARY KEY (id)); a parquet table has
+        to re-establish it after enough incremental writes.  The staging
+        copy holds no ``_log``, so the one crash-safe swap replaces data
+        and log together."""
         from wpvectordb_spark.operators import maintenance as M
 
-        return M.compact_table(
+        return M.rewrite_table(
             self.spark,
             self.path,
+            self.df(),  # recovers first
             target_file_bytes=target_file_bytes or M.DEFAULT_TARGET_FILE_BYTES,
             sort_by=list(sort_by),
         )
@@ -270,7 +372,7 @@ class VectorTableQueue:
 
     def init(self) -> None:
         if not _has_snapshot(self.spark, self.path):
-            self.spark.createDataFrame([], QUEUE_SCHEMA).write.mode("overwrite").parquet(self.path)
+            _local_frame(self.spark, QUEUE_SCHEMA).write.mode("overwrite").parquet(self.path)
 
     def df(self) -> DataFrame:
         fsutil.recover_snapshot(self.spark, self.path)
@@ -288,10 +390,10 @@ class VectorTableQueue:
     def add_posts(self, post_ids: list[int], now: _dt.datetime | None = None) -> None:
         now = now or _utcnow()
         base = self._next_job_id()
-        jobs = self.spark.createDataFrame(
-            [(base + i, int(p)) for i, p in enumerate(post_ids)],
-            "job_id long, post_id long",
-        )
+        jobs = _local_frame(self.spark, _JOB_SCHEMA, {
+            "job_id": [base + i for i in range(len(post_ids))],
+            "post_id": [int(p) for p in post_ids],
+        })
         self._write(Q.add_posts(self.df(), jobs, now))
 
     def get_next_batch(
@@ -304,17 +406,18 @@ class VectorTableQueue:
         (VectorTableQueue.php:186-223).  Re-read the table for the
         post-claim view."""
         now = now or _utcnow()
-        claimed_rows = Q.dequeue_priority(self.df(), batch_size).collect()
-        if claimed_rows:
+        claimed = Q.dequeue_priority(self.df(), batch_size).toArrow()
+        if claimed.num_rows:
             # rebuild the state from the ALREADY-collected ids — embedding
             # dequeue_priority in the rewrite would run the whole-queue
             # priority sort a second time.  Nothing claimed = no rewrite:
             # an idle polling worker must not pay (or crash-risk) a full
             # snapshot swap per empty poll.
             self._write(
-                Q.mark_processing(self.df(), [r["job_id"] for r in claimed_rows], now)
+                Q.mark_processing(self.df(), claimed["job_id"].to_pylist(), now)
             )
-        return self.spark.createDataFrame(claimed_rows, QUEUE_SCHEMA)
+        # back through Arrow: a LocalRelation, not a pickled row list
+        return self.spark.createDataFrame(claimed)
 
     def update_status(
         self,
