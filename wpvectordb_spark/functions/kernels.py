@@ -2,8 +2,14 @@
 
 Every kernel is a composition of built-in higher-order functions
 (``transform`` / ``aggregate`` / ``zip_with`` / ``bit_count``) — JVM-side,
-whole-stage-codegen'd, no Python UDFs.  At 100 TB these run inside the scan
-stage with zero extra shuffles.
+inside the scan stage with zero extra shuffles.  Spark does not
+code-generate these functions (``ArrayAggregate``, ``ZipWith`` and
+``ArrayTransform`` are ``CodegenFallback``), so they are interpreted per
+element.  They serve the write path (``derive``), the SQL twin and the
+other ANN paths.  The read path's scoring — search, batch search, IVF
+serving and IVF assignment — is NOT built from them: it runs the same
+arithmetic in one Arrow pass per scan partition
+(``functions.vector_arrow``), bit-identical to the folds here.
 
 Numeric-parity rules (shared with the DuckDB oracles, SURVEY.md §7.4.1):
 

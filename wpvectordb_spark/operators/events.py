@@ -195,15 +195,6 @@ def conversion_funnel(
     )
 
 
-def event_type_funnel(events: DataFrame) -> DataFrame:
-    """Per-type totals — the trivial rollup, one map-side-combined shuffle."""
-    return events.groupBy("event_type").agg(
-        F.count("*").alias("n_events"),
-        F.round(F.sum("value"), 6).alias("sum_value"),
-        F.round(F.avg("value"), 9).alias("avg_value"),
-    )
-
-
 def retention_cohorts(
     events: DataFrame,
     period_days: int = 7,

@@ -5,22 +5,27 @@ Re-expresses ``VectorTable::search()`` (VectorTable.php:73-233, SURVEY.md
 
     candidate filter (S2)            documents x doc_meta, QueryBuilder preds
       -> semi-join restrict (S3)     left_semi onto the vector table
-      -> Hamming top-(10n) (S4)      packed sign codes, bit_count(xor)
+      -> Hamming top-(10n) (S4)      packed sign codes, popcount(xor)
       -> cosine rerank top-(5n) (S6) exact double-precision cosine
       -> optional metadata sort (S7) EAV pivot + orderBy
       -> top-n projection (S8)
 
 Spark-first physical notes:
 
-* the query vector / its code / magnitude are **literal columns** — they ship
-  inside the task binary, no join, no shuffle (S1);
-* ``orderBy(...).limit(k)`` compiles to ``TakeOrderedAndProject`` — the same
-  per-partition-heap + merge the reference hand-rolls with SplMinHeap
-  (VectorTable.php:10-22), but distributed;
+* S4 and S6 are ONE ``mapInArrow`` pass over the scan
+  (``functions.vector_arrow``, a numpy-over-Arrow Python kernel): each
+  batch keeps its top 10n rows by ``(hamming, id)`` and scores their
+  exact cosines in the same pass.  The query vector, its code and
+  magnitude ride in the task closure — no literal array column, no join,
+  no shuffle (S1);
+* ``orderBy(...).limit(k)`` over those narrow survivors compiles to
+  ``TakeOrderedAndProject`` — the same per-partition-heap + merge the
+  reference hand-rolls with SplMinHeap (VectorTable.php:10-22), but
+  distributed;
 * the only exchanges in the plan are the two top-k merges (and the
   candidate ``distinct`` when a filter is present) — at 1000 executors the
   heavy work (Hamming over the full table) is embarrassingly parallel inside
-  the scan stage, with only 10n rows ever crossing the wire;
+  the scan stage, with only 10n rows per batch ever crossing the wire;
 * tie-breaks are total orders (``hd ASC, id ASC`` / ``cos DESC, id ASC``) —
   the reference's heap order is insertion-dependent (quirk §4.4.5); we pick
   determinism so results are reproducible across partitionings.
@@ -29,8 +34,9 @@ Funnel constants match the reference: stage-1 scan cap 1,000,000
 (VectorTable.php:81), Hamming survivors 10n (:82), cosine survivors 5n (:83).
 
 Batch mode (``search_many``) generalizes to a DataFrame of query vectors —
-the per-query top-k becomes one window ``row_number() <= k`` per query id;
-the reference (single query per call) cannot express this.
+the same scan pass scores every query, and the per-query top-k becomes one
+window ``row_number() <= k`` per query id over the survivors; the
+reference (single query per call) cannot express this.
 """
 
 from __future__ import annotations
@@ -39,6 +45,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from wpvectordb_spark.functions import kernels as K
+from wpvectordb_spark.functions import vector_arrow as VA
 from wpvectordb_spark.schemas import CODE_WORD_BITS
 
 STAGE1_LIMIT = 1_000_000  # VectorTable.php:81
@@ -109,10 +116,6 @@ def search(
                 "reference (and doc_meta for meta predicates)"
             )
         candidates = builder.candidates(documents, doc_meta, id_col=post_id_col)
-    q_code = F.lit(_pack_code(query_vector))
-    q_vec = F.array(*[F.lit(float(x)) for x in query_vector])
-    q_mag = F.lit(_magnitude(query_vector))
-
     df = vectors
     # S2+S3: restrict scan to filtered candidate documents (left-semi join;
     # Catalyst broadcasts the candidate set when small).
@@ -130,27 +133,31 @@ def search(
     if stage1_limit is not None:
         df = df.limit(stage1_limit)
 
-    # S4: Hamming prefilter -> top 10n (TakeOrderedAndProject).
-    code = F.col(code_col) if code_col else K.sign_code(vector_col)
-    hd = K.hamming(code, q_code).alias("hamming_distance")
+    # S4+S6 in one scan pass: each batch keeps its top 10n by Hamming and
+    # scores their exact cosines (no re-fetch, S5 obsolete); the merges
+    # below see only those narrow rows.
+    scored = VA.scan_topk(
+        df,
+        VA.QueryBatch.of(query_vector),
+        STAGE2_FACTOR * n,
+        id_col=id_col,
+        vector_col=vector_col,
+        mag_col=mag_col,
+        by_hamming=True,
+        code_col=code_col,
+        carry=(post_id_col,),
+        query_id_col=None,
+    )
     stage2 = (
-        df.select(id_col, post_id_col, vector_col, *( [mag_col] if mag_col else [] ), hd)
         # asc_nulls_last: Spark ascending puts NULLs FIRST by default, so
         # a NULL Hamming row (null code / mismatched word count) would
         # crowd real candidates out of the 10n pool
-        .orderBy(F.col("hamming_distance").asc_nulls_last(), F.col(id_col).asc())
+        scored.orderBy(F.col("hamming_distance").asc_nulls_last(), F.col(id_col).asc())
         .limit(STAGE2_FACTOR * n)
     )
-
-    # S6: exact cosine rerank -> top 5n.  No re-fetch needed (S5 obsolete:
-    # columns were carried through, unlike the reference's second query).
-    vm = F.col(mag_col) if mag_col else None
-    cos = K.cosine_similarity(q_vec, F.col(vector_col), q_mag, vm).alias("cosine_similarity")
-    stage3 = (
-        stage2.select(id_col, post_id_col, "hamming_distance", cos)
-        .orderBy(F.col("cosine_similarity").desc(), F.col(id_col).asc())
-        .limit(STAGE3_FACTOR * n)
-    )
+    stage3 = stage2.orderBy(
+        F.col("cosine_similarity").desc(), F.col(id_col).asc()
+    ).limit(STAGE3_FACTOR * n)
 
     # S7: optional metadata sort over the 5n survivors, else keep
     # similarity order.  S8: top-n.
@@ -209,27 +216,21 @@ def search_many(
     query_vec_col: str = "query_vector",
     expected_dim: int | None = None,
 ) -> DataFrame:
-    """Batch top-n search: a DataFrame of query vectors joined against the
-    table, per-query top-k via window rank.
+    """Batch top-n search: a DataFrame of query vectors against the
+    table, ``(query_id, id, rank, cosine_similarity)`` per query.
 
-    The query side is broadcast (small dim table); the big side never
-    shuffles for the join, and — critically — never shuffles for the
-    RANKING either: every window's input is projected down to (query_id,
-    id, score) BEFORE the exchange, so the per-query shuffle carries
-    ~16-byte rows, not the full vector+query payload (at 1024 dims the
-    un-projected form moves ~16 KB per (vector, query) pair through one
-    partition per query — the single-partition funnel the module
-    docstring warns about, just wearing a window).  The Hamming rank is
-    additionally pre-pruned per (query, input partition): each scan task
-    contributes at most 10n candidates per query, so the global per-query
-    sort sees <= 10n x #partitions narrow rows regardless of table size.
-    Survivors re-fetch their vectors by joining back to the table
-    (broadcast of the 10nQ-row survivor set), mirroring the single-query
-    funnel's S5 stage.
+    The query batch is collected on the driver (one Arrow job; a serving
+    batch is bounded by construction, as in ``pq_topk_many``) and the
+    table is scored in ONE ``mapInArrow`` pass (functions.vector_arrow):
+    each batch keeps, per query, its top 10n rows by ``(hamming, id)``
+    and scores their exact cosines.  One exchange on ``query_id`` then
+    carries <= 10n x #batches narrow rows per query into the two rank
+    windows (global top 10n by Hamming, then top n by cosine).  No cross
+    join, no refetch join, and the per-(query, row) scores are never
+    materialized.
 
-    With ``two_phase`` the Hamming funnel keeps 10n rows per query
-    before the exact rerank — the same funnel as ``search`` but for Q
-    queries in one plan.
+    With ``two_phase=False`` each batch keeps its top n by cosine over
+    every row (the exact batched baseline).
 
     Query dimensions are guarded like the single-query facade path
     (table._check_length): a query vector whose length differs from the
@@ -238,14 +239,11 @@ def search_many(
     all-NULL distances).  Pass ``expected_dim`` (the facade's declared
     ``vector_length``) to enforce that dimension with NO extra work;
     without it the table's dimension is probed from ONE ARBITRARY row —
-    an eager metadata-cheap Spark job at plan-construction time, and on
-    a ragged-dimension table the enforced dim is whichever row the probe
-    happened to read (ragged tables should always pass ``expected_dim``).
-    Mismatched query rows then fail loudly in-plan; a NULL query vector
-    is NOT a mismatch — it is dropped up front and contributes no result
-    rows (the pre-guard behavior was worse than either: NULL scores
-    still take row_number ranks, so a NULL query returned n rows of
-    NULL-cosine noise).
+    an eager metadata-cheap Spark job, and on a ragged-dimension table
+    the enforced dim is whichever row the probe happened to read (ragged
+    tables should always pass ``expected_dim``).  A mismatched query
+    raises ``ValueError`` at call time; a NULL query vector is NOT a
+    mismatch — it is dropped and contributes no result rows.
     """
     if expected_dim is not None:
         table_dim = int(expected_dim)
@@ -256,89 +254,35 @@ def search_many(
             if dim_row is not None and dim_row["d"] is not None
             else None
         )
-    guarded_qv = F.col(query_vec_col)
-    if table_dim is not None:
-        guarded_qv = F.when(
-            F.size(query_vec_col) == table_dim, F.col(query_vec_col)
-        ).otherwise(
-            F.raise_error(
-                F.concat(
-                    F.lit("search_many: query vector has "),
-                    F.size(query_vec_col).cast("string"),
-                    F.lit(f" dims; table has {table_dim}"),
-                )
-            ).cast("array<float>")
-        )
-    queries = queries.where(F.col(query_vec_col).isNotNull())
-    q = queries.select(
-        F.col(query_id_col),
-        guarded_qv.alias(query_vec_col),
-        K.sign_code(guarded_qv).alias("_q_code"),
-        K.magnitude(guarded_qv).alias("_q_mag"),
+    batch = VA.QueryBatch.collect(
+        queries, query_id_col, query_vec_col, table_dim, "search_many", "table"
     )
-    # Derive per-row code/magnitude BEFORE the cross join: inline
-    # expressions after the join would be re-evaluated once per
-    # (vector, query) pair instead of once per vector.
-    base = vectors
-    if code_col is None and two_phase:
-        base = base.withColumn("_code", K.sign_code(vector_col))
-        code_col_eff = "_code"
-    else:
-        code_col_eff = code_col
-    if mag_col is None:
-        base = base.withColumn("_mag", K.magnitude(vector_col))
-        mag_col_eff = "_mag"
-    else:
-        mag_col_eff = mag_col
-
+    keep = STAGE2_FACTOR * n if two_phase else n
+    scored = VA.scan_topk(
+        vectors,
+        batch,
+        keep,
+        id_col=id_col,
+        vector_col=vector_col,
+        mag_col=mag_col,
+        by_hamming=two_phase,
+        code_col=code_col,
+        query_id_col=query_id_col,
+    )
     if two_phase:
-        hd = K.hamming(F.col(code_col_eff), F.col("_q_code"))
-        narrow = (
-            base.select(id_col, code_col_eff)
-            .join(F.broadcast(q.select(query_id_col, "_q_code")), how="cross")
-            .select(
-                F.col(query_id_col),
-                F.col(id_col),
-                hd.alias("hamming_distance"),
-                F.spark_partition_id().alias("_pid"),
-            )
+        w_h = Window.partitionBy(query_id_col).orderBy(
+            F.col("hamming_distance").asc_nulls_last(), F.col(id_col).asc()
         )
-        # local pre-top-k: a per-(query, scan-partition) prune is a
-        # superset of each partition's contribution to the global top-10n,
-        # so results are identical while the global sort input shrinks
-        # from |table| to <= 10n x #partitions rows per query
-        hord = [F.col("hamming_distance").asc_nulls_last(), F.col(id_col).asc()]
-        w_local = Window.partitionBy(query_id_col, "_pid").orderBy(*hord)
-        w_h = Window.partitionBy(query_id_col).orderBy(*hord)
-        surv = (
-            narrow.withColumn("_lrank", F.row_number().over(w_local))
-            .where(F.col("_lrank") <= STAGE2_FACTOR * n)
-            .withColumn("_hrank", F.row_number().over(w_h))
-            .where(F.col("_hrank") <= STAGE2_FACTOR * n)
-            .select(query_id_col, id_col)
+        scored = scored.withColumn("_hrank", F.row_number().over(w_h)).where(
+            F.col("_hrank") <= keep
         )
-        refetch = base.select(id_col, vector_col, mag_col_eff).join(
-            F.broadcast(surv), id_col
-        )
-        joined = refetch.join(
-            F.broadcast(q.select(query_id_col, query_vec_col, "_q_mag")), query_id_col
-        )
-    else:
-        joined = base.select(id_col, vector_col, mag_col_eff).join(
-            F.broadcast(q.select(query_id_col, query_vec_col, "_q_mag")), how="cross"
-        )
-
-    cos = K.cosine_similarity(
-        F.col(query_vec_col), F.col(vector_col), F.col("_q_mag"), F.col(mag_col_eff)
-    )
-    c_narrow = joined.select(
-        F.col(query_id_col), F.col(id_col), cos.alias("cosine_similarity")
-    )
     w_c = Window.partitionBy(query_id_col).orderBy(
         F.col("cosine_similarity").desc_nulls_last(), F.col(id_col).asc()
     )
-    return (
-        c_narrow.withColumn("_crank", F.row_number().over(w_c))
+    out = (
+        scored.withColumn("_crank", F.row_number().over(w_c))
         .where(F.col("_crank") <= n)
         .select(query_id_col, id_col, F.col("_crank").alias("rank"), "cosine_similarity")
     )
+    # an empty batch: LIMIT 0 plans as an empty local relation, no job
+    return out if len(batch) else out.limit(0)

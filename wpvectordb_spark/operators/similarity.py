@@ -18,10 +18,12 @@ id) so results are oracle-reproducible; production would run k-means
 
 from __future__ import annotations
 
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from wpvectordb_spark.functions import kernels as K
+from wpvectordb_spark.functions import vector_arrow as VA
 
 
 def brute_force_topk_arrow(
@@ -32,52 +34,27 @@ def brute_force_topk_arrow(
     vector_col: str = "embedding",
     round_to: int | None = 9,
 ) -> DataFrame:
-    """Exact cosine top-k with an Arrow-vectorized numpy kernel.
-
-    The Catalyst ``aggregate``/``zip_with`` form (search.brute_force_topk)
-    is the no-dependency default; at high dimensionality (1024+) a
-    vectorized Pandas UDF computes the dot products as one BLAS matmul per
-    Arrow batch — the documented "UDFs are the slow path ... unless
-    Arrow-batched" escape hatch.  Results match the Catalyst form to
-    double rounding.
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    q = np.asarray(query_vector, dtype=np.float64)
-    q_norm = float(np.sqrt((q * q).sum()))
-
-    def _cos(col):
-        vals = col.to_numpy()
-        if len(vals) == 0:  # empty Arrow batch: np.stack would raise
-            return pd.Series([], dtype="float64")
-        mask = np.array([v is not None for v in vals])
-        out = np.full(len(vals), np.nan)
-        if mask.any():
-            mat = np.stack(vals[mask]).astype(np.float64)
-            dots = mat @ q
-            norms = np.sqrt((mat * mat).sum(axis=1))
-            out[mask] = dots / (q_norm * norms + 1e-12)
-        # NULL embeddings yield NULL cosine (rank last), matching the
-        # Catalyst brute-force path instead of crashing the batch.
-        # KNOWN divergence: a NaN cosine (NaN inside an embedding) also
-        # becomes NULL through Arrow and ranks LAST here, while Spark
-        # SQL orders NaN ABOVE all doubles so the Catalyst form ranks it
-        # FIRST — degenerate inputs only; parity holds for finite data.
-        return pd.Series(out)
-
-    # explicit registration: `from __future__ import annotations` stringifies
-    # type hints, which the pandas_udf signature inference cannot resolve
-    cos = pandas_udf(_cos, "double")
-
+    """Exact cosine top-k through the Arrow scoring kernel
+    (``functions.vector_arrow``): one ``mapInArrow`` pass keeps each
+    batch's top n, one ``TakeOrderedAndProject`` merges them.  Same
+    fold, same order (NaN first, NULL last, ties to the smaller id), so
+    the rows equal the Catalyst ``search.brute_force_topk``'s."""
     ranked = (
-        vectors.select(F.col(id_col), cos(F.col(vector_col)).alias("_cos"))
-        .orderBy(F.col("_cos").desc(), F.col(id_col).asc())
+        VA.scan_topk(
+            vectors,
+            VA.QueryBatch.of(query_vector),
+            n,
+            id_col=id_col,
+            vector_col=vector_col,
+            query_id_col=None,
+        )
+        .orderBy(F.col("cosine_similarity").desc(), F.col(id_col).asc())
         .limit(n)
     )
-    out = F.round("_cos", round_to) if round_to is not None else F.col("_cos")
-    return ranked.select(id_col, out.alias("cosine_similarity"))
+    cos = F.col("cosine_similarity")
+    return ranked.select(
+        id_col, (F.round(cos, round_to) if round_to is not None else cos).alias("cosine_similarity")
+    )
 
 
 def quantized_topk(
@@ -323,95 +300,39 @@ def assign_clusters(
     id_col: str = "vec_id",
     vector_col: str = "embedding",
 ) -> DataFrame:
-    """IVF index build: nearest centroid (max cosine) per vector via ONE
-    per-row fold over the broadcast centroid array.  Deterministic
-    tie-break on cluster_id (equal sims -> smallest id, the same
-    lexicographic (sim, -cluster_id) order the previous ``max_by`` form
-    used — the fold compares the identical struct key, so NULL-sim
-    vectors still land on the smallest cluster_id with a NULL
-    ``centroid_sim``).
+    """IVF index build: nearest centroid (max cosine) per vector.
 
-    SHAPE (round 11, guide §2.4 "remove shuffles outright"): the old
-    broadcast-cross-join + ``max_by`` form exploded k candidate rows per
-    vector and re-grouped them by ``id_col`` — rows that never left
-    their partition — and ``max_by`` with a struct ordering key is NOT
-    hash-aggregable, so the plan was Sort(|vectors| x k, payload
-    included) -> partial SortAggregate -> Exchange(|vectors| rows WITH
-    embeddings) -> Sort -> SortAggregate.  Collapsing the (bounded,
-    already-broadcast) centroid table to ONE array row first makes the
-    assignment a single narrow projection: Scan -> BroadcastNestedLoop
-    (1-row build) -> Project — zero sorts, zero shuffles of vector
-    payloads (plans/r11/ann_ivf_{before,after}.txt).  Arithmetic per
-    (vector, centroid) pair is unchanged (same cosine expression), and
-    the vector's own magnitude is now computed once per row instead of
-    once per candidate pair — the same float value, so assignments and
-    sims are bit-identical (test-asserted against the corpus + NULL /
-    ragged-dim / empty-centroid edges).
+    The centroid table (<= n_clusters rows) is collected once on the
+    driver and every vector is scored against all of it in ONE
+    ``mapInArrow`` pass (``functions.vector_arrow.nearest_centroid``):
+    no join, no sort, no shuffle of the vector payload.  The winner is
+    the max of ``(sim, -cluster_id)`` in Spark's struct order — equal
+    sims go to the smallest cluster_id, and a NULL-sim vector (NULL or
+    wrong-length embedding) lands on the smallest cluster_id with a NULL
+    ``centroid_sim``.  An empty centroid table gives an empty result.
 
     DUPLICATE-ID CONTRACT: ``id_col`` is assumed unique (a vector
-    table's primary key, as every call site guarantees).  A duplicated
-    id now yields one assignment row PER INPUT ROW — each deterministic
-    for its own vector — where the old groupBy form collapsed
-    duplicates to one row via a NONDETERMINISTIC ``first(embedding)``;
-    deduplicate upstream if ids can repeat."""
-    cents = centroids.agg(
-        F.array_sort(
-            F.collect_list(
-                F.struct(
-                    F.col("cluster_id"), F.col("centroid"), F.col("centroid_mag")
-                )
-            )
-        ).alias("_cents")
-    ).where(F.size("_cents") > 0)  # empty centroid table -> empty result,
-    # matching the old cross-join form (agg-without-groupBy always emits
-    # one row; the guard restores the join's empty-propagation)
-
-    def _fold(vm):
-        # vm is a BOUND lambda variable (one-element transform bind, the
-        # collapse-proof _bind1 pattern): a projected `_vmag` column
-        # would be re-inlined into the fold lambda by CollapseProject
-        # and recomputed per centroid — the exact trap PERFORMANCE.md
-        # item 34 documents.
-        def _step(acc, c):
-            sim = K.cosine_similarity(
-                F.col(vector_col), c["centroid"], vm, c["centroid_mag"]
-            )
-            new_key = F.struct(sim.alias("s"), (-c["cluster_id"]).alias("nc"))
-            acc_key = F.struct(
-                acc["_sim"].alias("s"), (-acc["cluster_id"]).alias("nc")
-            )
-            # strict > over the ascending-cluster_id array == max_by's
-            # (sim, -cluster_id) argmax; struct ordering handles NULL
-            # sims exactly as max_by's struct key did (NULL lowest)
-            return F.when(
-                acc["cluster_id"].isNull() | (new_key > acc_key),
-                F.struct(
-                    c["cluster_id"].alias("cluster_id"), sim.alias("_sim")
-                ),
-            ).otherwise(acc)
-
-        return F.aggregate(
-            F.col("_cents"),
-            F.struct(
-                F.lit(None).cast("long").alias("cluster_id"),
-                F.lit(None).cast("double").alias("_sim"),
-            ),
-            _step,
-        )
-
-    best = F.element_at(
-        F.transform(F.array(K.magnitude(vector_col)), _fold), 1
-    )
-    return (
-        vectors.crossJoin(F.broadcast(cents))
-        .withColumn("_best", best)
-        .select(
+    table's primary key, as every call site guarantees); a duplicated
+    id yields one assignment row PER INPUT ROW, each deterministic for
+    its own vector — deduplicate upstream if ids can repeat."""
+    cents = _collect_centroids(centroids)
+    if not len(cents):
+        return vectors.where(F.lit(False)).select(
             F.col(id_col),
             F.col(vector_col),
-            F.col("_best.cluster_id").alias("cluster_id"),
-            F.round(F.col("_best._sim"), 9).alias("centroid_sim"),
+            F.lit(None).cast(cents.type).alias("cluster_id"),
+            F.lit(None).cast("double").alias("centroid_sim"),
         )
+    assigned = VA.nearest_centroid(vectors, cents, id_col=id_col, vector_col=vector_col)
+    return assigned.select(
+        id_col, vector_col, "cluster_id", F.round("_sim", 9).alias("centroid_sim")
     )
+
+
+def _collect_centroids(centroids: DataFrame) -> VA.Centroids:
+    """The centroid table on the driver (bounded: <= n_clusters rows)."""
+    cents = centroids.select("cluster_id", "centroid", "centroid_mag")
+    return VA.Centroids([tuple(r) for r in cents.collect()], cents.schema["cluster_id"].dataType)
 
 
 def build_ivf_index(
@@ -648,41 +569,36 @@ def ivf_topk_many(
     where: str | None = None,
     candidates: DataFrame | None = None,
 ) -> DataFrame:
-    """Batched IVF: a DataFrame of query vectors served by ONE plan
+    """Batched IVF: a DataFrame of query vectors served by ONE scan
     against the persisted (or precomputed) index — the 100x serving
     shape.  ``ivf_topk_from_index`` runs one driver round-trip per query
     (rank centroids, collect the probe list, read, rank); a query BATCH
-    through that loop re-reads and re-plans per vector.  Here the whole
-    batch shares one pass:
+    through that loop re-reads and re-plans per vector.  Here:
 
-    1. probe ranking — queries cross-join the broadcast centroid table
-       (tiny by construction) and a per-query ``row_number`` keeps each
-       query's ``n_probe`` best clusters;
-    2. partition pruning — the probed cluster ids are collected once
-       (bounded by ``n_clusters`` DISTINCT values, not by |queries|) into
-       a literal ``IN`` filter, so the partitioned-by-cluster_id parquet
-       read skips every cluster no query probes;
-    3. candidate fan-out — pruned vectors equi-join the broadcast
-       (query_id, cluster_id, query_vector) probe pairs on cluster_id:
-       each vector row fans out ONLY to the queries probing its cluster
-       (never |queries| copies, the cross-join failure mode);
-    4. per-query top-k — the ``search_many`` window pattern: project to
-       narrow (query_id, id, score) rows BEFORE the rank exchange, local
-       per-(query, scan-partition) pre-top-k so the global per-query
-       sort sees <= k x #partitions rows regardless of corpus size.
+    1. probe ranking — the query batch and the centroid table (tiny by
+       construction) are collected on the driver, and each query's
+       ``n_probe`` best clusters by ``(sim DESC, cluster_id)`` are ranked
+       there with the scan kernel's own fold;
+    2. partition pruning — the union of probed cluster ids (<=
+       n_clusters values) becomes a literal ``IN`` filter, so the
+       partitioned-by-cluster_id parquet read skips every cluster no
+       query probes;
+    3. scoring — ONE ``mapInArrow`` pass (``functions.vector_arrow``)
+       scores each row against only the queries probing its cluster and
+       keeps each batch's top k per query;
+    4. per-query top-k — one exchange on ``query_id`` carries <= k x
+       #batches narrow rows per query into one rank window.
 
     ``path`` reads the ``build_ivf_index`` layout; alternatively pass
     in-memory ``assigned`` (an ``assign_clusters`` result — reusable
     across calls) + ``centroids`` frames.  Per-query results equal
     ``ivf_topk_from_index`` on the same index (test-asserted).  Pass
-    ``expected_dim`` (the index's vector length) to make mismatched
-    query vectors fail loudly in-plan — search_many's contract; without
-    it a mismatched query ranks by a truncated ``zip_with`` fold like
-    the single-query form, garbage-in-garbage-out, and dimension guards
-    live at the facade layer (table._check_length).  NULL query vectors
-    are dropped up front either way (same contract as search_many:
-    without the drop a NULL query's NULL similarities still take
-    row_number ranks and return k rows of NULL-cosine noise).
+    ``expected_dim`` (the index's vector length) to make a mismatched
+    query raise ``ValueError`` at call time — search_many's contract;
+    without it a mismatched query scores NULL cosines,
+    garbage-in-garbage-out, and dimension guards live at the facade
+    layer (table._check_length).  NULL query vectors are dropped up
+    front either way (same contract as search_many).
 
     ``where=`` / ``candidates=`` restrict the candidate set for the
     WHOLE batch before any distance math (``_restrict_candidates`` —
@@ -693,46 +609,14 @@ def ivf_topk_many(
         centroids = spark.read.parquet(f"{path}/centroids")
     elif assigned is None or centroids is None:
         raise ValueError("ivf_topk_many: pass path= or assigned= + centroids=")
-    queries = queries.where(F.col(query_vec_col).isNotNull())
-    if expected_dim is not None:
-        dim = int(expected_dim)
-        queries = queries.withColumn(
-            query_vec_col,
-            F.when(F.size(query_vec_col) == dim, F.col(query_vec_col)).otherwise(
-                F.raise_error(
-                    F.concat(
-                        F.lit("ivf_topk_many: query vector has "),
-                        F.size(query_vec_col).cast("string"),
-                        F.lit(f" dims; index has {dim}"),
-                    )
-                ).cast("array<float>")
-            ),
-        )
-    q = queries.select(
-        query_id_col,
-        query_vec_col,
-        K.magnitude(query_vec_col).alias("_q_mag"),
+    batch = VA.QueryBatch.collect(
+        queries, query_id_col, query_vec_col, expected_dim, "ivf_topk_many", "index"
     )
-    qsim = K.cosine_similarity(
-        F.col(query_vec_col), F.col("centroid"), F.col("_q_mag"), F.col("centroid_mag")
-    )
-    w_probe = Window.partitionBy(query_id_col).orderBy(
-        F.col("_qsim").desc(), F.col("cluster_id").asc()
-    )
-    probes = (
-        q.crossJoin(F.broadcast(centroids))
-        .select(query_id_col, query_vec_col, "_q_mag", "cluster_id", qsim.alias("_qsim"))
-        .withColumn("_prank", F.row_number().over(w_probe))
-        .where(F.col("_prank") <= n_probe)
-        .select(query_id_col, query_vec_col, "_q_mag", "cluster_id")
-    )
-    probes = probes.localCheckpoint(eager=True)  # tiny (Q x n_probe); computed
-    # once here instead of once for the id-collect and once per downstream join
-    probe_ids = sorted(
-        r["cluster_id"]
-        for r in probes.select("cluster_id").distinct().collect()
-        # bounded collect: <= n_clusters distinct values regardless of |queries|
-    )
+    cents = _collect_centroids(centroids)
+    order = cents.ranked(batch.rows, len(batch))[0]
+    # each query's n_probe nearest clusters, ranked on the driver
+    probes = [cents.ids.take(order[:n_probe, i]).to_pylist() for i in range(len(batch))]
+    probe_ids = sorted({c for p in probes for c in p})
     if path is not None:
         clustered = spark.read.parquet(f"{path}/vectors").where(
             F.col("cluster_id").isin(probe_ids)  # literal IN -> partition pruning
@@ -740,35 +624,33 @@ def ivf_topk_many(
     else:
         clustered = assigned.where(F.col("cluster_id").isin(probe_ids))
     clustered = _restrict_candidates(clustered, where, candidates, id_col)
-    cos = K.cosine_similarity(
-        F.col(query_vec_col), F.col(vector_col), F.col("_q_mag"), None
+    scored = VA.scan_topk(
+        clustered,
+        batch,
+        k,
+        id_col=id_col,
+        vector_col=vector_col,
+        carry=("cluster_id",),
+        query_id_col=query_id_col,
+        probe_col="cluster_id",
+        probes=probes,
     )
-    narrow = (
-        clustered.join(F.broadcast(probes), "cluster_id")
-        .select(
-            F.col(query_id_col),
-            F.col(id_col),
-            F.col("cluster_id"),
-            cos.alias("_cos"),
-            F.spark_partition_id().alias("_pid"),
-        )
+    w = Window.partitionBy(query_id_col).orderBy(
+        F.col("cosine_similarity").desc_nulls_last(), F.col(id_col).asc()
     )
-    order = [F.col("_cos").desc_nulls_last(), F.col(id_col).asc()]
-    w_local = Window.partitionBy(query_id_col, "_pid").orderBy(*order)
-    w_global = Window.partitionBy(query_id_col).orderBy(*order)
-    return (
-        narrow.withColumn("_lrank", F.row_number().over(w_local))
-        .where(F.col("_lrank") <= k)
-        .withColumn("_crank", F.row_number().over(w_global))
+    out = (
+        scored.withColumn("_crank", F.row_number().over(w))
         .where(F.col("_crank") <= k)
         .select(
             query_id_col,
             id_col,
             "cluster_id",
             F.col("_crank").alias("rank"),
-            F.round("_cos", 9).alias("cosine_similarity"),
+            F.round("cosine_similarity", 9).alias("cosine_similarity"),
         )
     )
+    # an empty batch: LIMIT 0 plans as an empty local relation, no job
+    return out if len(batch) else out.limit(0)
 
 
 # --- LSH-bucketed ANN (sign-code band buckets) -------------------------------
@@ -2022,7 +1904,7 @@ def ivfpq_topk_many(
     1. probe ranking — the query frame cross-joins the broadcast stored
        centroids (tiny by construction) and a per-query ``row_number``
        keeps ``n_probe`` clusters; the (query-ordinal, cluster_id)
-       pairs are localCheckpointed once (Q x n_probe rows);
+       pairs are collected once (Q x n_probe rows);
     2. partition pruning — the UNION of probed cluster ids (bounded by
        n_clusters DISTINCT values) becomes a literal ``IN`` filter on
        the partitionBy(cluster_id) read, so unprobed partitions are
@@ -2224,15 +2106,14 @@ def ivfpq_index_stats(spark, path: str) -> DataFrame:
         spark.read.parquet(f"{path}/vectors")
         .groupBy("cluster_id")
         .agg(F.count("*").alias("n_vectors"))
-        .localCheckpoint(eager=True)  # <= n_clusters rows; read once for
-        # the scalar total and once for the stats projection
+        .toArrow()  # bounded: <= n_clusters rows
     )
     params = _read_ivfpq_params(spark, path)
     n_clusters = (
         int(params["n_clusters"]) if params is not None else None
     )
-    total = counts.agg(F.sum("n_vectors")).first()[0] or 0
-    stats = counts.select(
+    total = pc.sum(counts.column("n_vectors")).as_py() or 0
+    stats = spark.createDataFrame(counts).select(
         "cluster_id",
         "n_vectors",
         F.round(F.col("n_vectors") / F.lit(total), 6).alias("share"),
